@@ -14,7 +14,8 @@ main.go:19-58`) whose `run` command wires `<clickhouse_dsn> <endpoint>
   (`sinks/clickhouse.py`); table state itself lives in the parquet
   warehouse;
 * flags kept name-for-name where they exist in the reference:
-  ``--flush-interval`` (`run.go:28`) and ``--on-module-hash-mismatch``
+  ``--flush-interval`` (`run.go:28`; accepted and ignored — the stream
+  trigger sets the flush window) and ``--on-module-hash-mismatch``
   (`run.go:29-37`; the reference spells the flag "mistmatch" — we use
   the corrected spelling).
 
@@ -96,7 +97,13 @@ def build_parser() -> argparse.ArgumentParser:
     add_schema_flags(run)
     add_warehouse_flags(run)
     run.add_argument("--dsn", default=None, help="clickhouse:// DSN for wire-statement emission (optional)")
-    run.add_argument("--flush-interval", type=int, default=1000, help="catch-up blocks per flush (run.go:28)")
+    run.add_argument(
+        "--flush-interval",
+        type=int,
+        default=1000,
+        help="accepted for parity and ignored (run.go:28): the stream trigger sets the "
+        "flush window (catch-up batches the whole backlog, --live flushes each arrival)",
+    )
     run.add_argument(
         "--on-module-hash-mismatch",
         # the reference spells the flag "--on-module-hash-mistmatch"
@@ -222,7 +229,6 @@ def _pipeline(spark, catalog, args):
     config = EngineConfig(
         warehouse_dir=args.warehouse,
         checkpoint_dir=args.checkpoint,
-        flush_interval=getattr(args, "flush_interval", 1000),
         on_module_hash_mismatch=getattr(args, "on_module_hash_mismatch", "error"),
         n_buckets=getattr(args, "n_buckets", 16),
         clickhouse_dsn=getattr(args, "dsn", None),
@@ -259,7 +265,7 @@ def cmd_run(spark, args) -> int:
         "cursor": None
         if cursor is None
         else {"block_num": cursor.block_num, "block_id": cursor.block_id},
-        "stats": pipe.stats,
+        "stats": {k: v for k, v in vars(pipe.stats).items() if not k.startswith("_")},
     }
     print(json.dumps(summary))
     return 0
@@ -425,12 +431,7 @@ def main(argv: list[str] | None = None) -> int:
             # cmd_run parks its pipeline on args so live scrapes see the
             # current flush counters (reference sinker/sinker.go:119-131).
             pipe = getattr(args, "_metrics_pipe", None)
-            s = SinkStats()
-            if pipe is not None:
-                s.flush_count = int(pipe.stats.get("flush_count", 0))
-                s.flushed_entries = int(pipe.stats.get("flushed_entries", 0))
-                s.flush_duration_s = float(pipe.stats.get("flush_seconds", 0.0))
-            return s
+            return SinkStats() if pipe is None else pipe.stats
 
         metrics_server = serve_metrics(_live_stats, args.metrics_listen_addr)
     try:

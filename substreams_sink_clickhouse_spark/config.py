@@ -73,15 +73,13 @@ class ClickHouseDSN:
 class EngineConfig:
     """Top-level engine configuration.
 
-    ``warehouse_dir`` holds managed parquet table state; flush cadence
-    mirrors the reference's block-modulo policy
-    (/root/reference/sinker/sinker.go:19-22,180-194).
+    ``warehouse_dir`` holds managed parquet table state.  The flush
+    cadence is not configured here: the stream trigger sets the flush
+    window (streaming/pipeline.py, O9).
     """
 
     warehouse_dir: str = "/tmp/sscs_warehouse"
     checkpoint_dir: str = "/tmp/sscs_checkpoints"
-    flush_interval: int = 1000  # historical blocks per flush
-    live_flush_interval: int = 1  # live blocks per flush
     on_module_hash_mismatch: str = "error"  # error | warn | ignore
     #: pk-buckets per table: per-epoch rewrite cost is O(touched
     #: buckets / n_buckets of the table); size so one bucket's state

@@ -2,29 +2,29 @@
 
 The reference exports three Prometheus series — flush count, flushed
 entries, flush duration (/root/reference/sinker/metrics.go:13-15) —
-and logs throughput every 15 s (sinker/stats.go:38-70).  Spark's
-native surface for this is ``StreamingQueryListener`` +
-``query.lastProgress``; this module bridges both into the same three
-counters plus a rate log line.
+and logs throughput every 15 s (sinker/stats.go:38-70).  The ingest
+pipeline owns one :class:`SinkStats`, fed by every committed flush
+(``ChangesIngestPipeline.process_batch``); this module renders it as
+the same three series plus the last committed block, and as a rate
+log line.
 """
 
 from __future__ import annotations
 
-import logging
 import time
 from dataclasses import dataclass, field
-
-logger = logging.getLogger("sscs.metrics")
 
 
 @dataclass
 class SinkStats:
-    """Counter parity with sinker/metrics.go:13-15."""
+    """Counter parity with sinker/metrics.go:13-15, plus the last
+    committed block and the seconds each flush phase took."""
 
     flush_count: int = 0
     flushed_entries: int = 0
     flush_duration_s: float = 0.0
     last_block: int = -1
+    phase_seconds: dict[str, float] = field(default_factory=dict)
     _started: float = field(default_factory=time.time)
 
     def record_flush(self, entries: int, duration_s: float, last_block: int) -> None:
@@ -44,36 +44,11 @@ class SinkStats:
         )
 
 
-def make_listener(stats: SinkStats):
-    """StreamingQueryListener feeding SinkStats from query progress."""
-    from pyspark.sql.streaming import StreamingQueryListener
-
-    class _Listener(StreamingQueryListener):
-        def onQueryStarted(self, event):
-            logger.info("stream started: %s", event.id)
-
-        def onQueryProgress(self, event):
-            p = event.progress
-            stats.record_flush(
-                entries=p.numInputRows,
-                duration_s=(p.batchDuration or 0) / 1000.0,
-                last_block=stats.last_block,
-            )
-            logger.info("progress: %s", stats.log_line())
-
-        def onQueryIdle(self, event):
-            pass
-
-        def onQueryTerminated(self, event):
-            logger.info("stream terminated: %s", event.id)
-
-    return _Listener()
-
-
 def render_prometheus(stats: SinkStats) -> str:
     """Prometheus text exposition of the reference's three series,
     name-for-name (/root/reference/sinker/metrics.go:13-15; duration
-    there is nanoseconds — kept for scrape-config compatibility)."""
+    there is nanoseconds — kept for scrape-config compatibility), plus
+    the last committed block."""
     return (
         "# TYPE substreams_sink_clickhouse_store_flush_count counter\n"
         f"substreams_sink_clickhouse_store_flush_count {stats.flush_count}\n"
@@ -81,6 +56,8 @@ def render_prometheus(stats: SinkStats) -> str:
         f"substreams_sink_clickhouse_flushed_entries_count {stats.flushed_entries}\n"
         "# TYPE substreams_sink_clickhouse_store_flush_duration counter\n"
         f"substreams_sink_clickhouse_store_flush_duration {int(stats.flush_duration_s * 1e9)}\n"
+        "# TYPE substreams_sink_clickhouse_last_block gauge\n"
+        f"substreams_sink_clickhouse_last_block {stats.last_block}\n"
     )
 
 

@@ -50,10 +50,7 @@ from substreams_sink_clickhouse_spark.operators.merge import (
 from substreams_sink_clickhouse_spark.errors import UnknownTableError
 from substreams_sink_clickhouse_spark.sinks.clickhouse import cursor_update_statement
 from substreams_sink_clickhouse_spark.streaming.cursors import Cursor, CursorStore
-
-#: Flush cadence constants (sinker/sinker.go:19-22).
-HISTORICAL_BLOCK_FLUSH_EACH = 1000
-LIVE_BLOCK_FLUSH_EACH = 1
+from substreams_sink_clickhouse_spark.streaming.metrics import SinkStats
 
 #: Deletion-vector layer cap: a bucket carrying this many data layers
 #: is compacted by the next epoch's full rewrite instead of growing
@@ -131,9 +128,17 @@ class TableStateStore:
     as file-level rewrite + snapshot manifest; we keep it explicit and
     dependency-free.)
 
-    ``history`` holds full bucket-map snapshots, so reorg rollback
-    (a manifest edit) and vacuum (drop unreferenced bucket dirs) work
-    unchanged on the bucketed layout.
+    ``history`` holds full bucket-map snapshots, each with the bucket
+    modulus it was written under (``n_buckets``), so reorg rollback (a
+    manifest edit) restores the modulus with the map, and vacuum (drop
+    unreferenced bucket dirs) works unchanged on the bucketed layout.
+
+    One write path: every commit — epoch (rewrite or sidecar) and
+    maintenance (OPTIMIZE / TTL / UPDATE / REBUCKET) — stages each
+    table through ``_stage_table``, which writes bucket directories
+    with ``_write_buckets`` and builds the table's next manifest entry
+    with ``_table_entry``; reorg rollback builds its entry with
+    ``_table_entry`` too.
 
     Round 5 adds DELETION-VECTOR commits (Delta/Iceberg
     merge-on-read, dependency-free): a bucket value may be a layered
@@ -164,23 +169,27 @@ class TableStateStore:
             F.xxhash64(F.col(pk_col).cast("string")), F.lit(n or self.n_buckets)
         )
 
-    def table_n_buckets(self, name: str) -> int:
-        """Per-table bucket fan-out: manifest metadata (set by
+    def _entry_n_buckets(self, entry: dict | None) -> int:
+        """Bucket modulus of a manifest table entry (set by
         ``rebucket``), defaulting to the store-wide setting.  Bucket
         count must scale with the table — 16 buckets bounding epoch
         rewrites at GB scale become multi-TB rewrite units at 100 TB —
         so it is table state, not engine config."""
-        entry = self.read_manifest()["tables"].get(name)
         if entry and "n_buckets" in entry:
             return int(entry["n_buckets"])
         return self.n_buckets
 
-    def batch_bucket_expr(self, tables: list[str]):
+    def table_n_buckets(self, name: str) -> int:
+        """Per-table bucket fan-out, read from the manifest."""
+        return self._entry_n_buckets(self.read_manifest()["tables"].get(name))
+
+    def batch_bucket_expr(self, tables: list[str], entries: dict):
         """Bucket id for a mixed-table changes batch (column ``pk``
-        against column ``table``), honoring each table's own modulus.
+        against column ``table``), honoring each table's own modulus
+        as recorded in ``entries`` (the manifest's table map).
         Collapses to a single literal when all modulî agree (the
         common case — no per-row branching in the plan)."""
-        moduli = {t: self.table_n_buckets(t) for t in tables}
+        moduli = {t: self._entry_n_buckets(entries.get(t)) for t in tables}
         values = set(moduli.values())
         if len(values) <= 1:
             n = values.pop() if values else self.n_buckets
@@ -206,6 +215,101 @@ class TableStateStore:
         with os.fdopen(fd, "w", encoding="utf-8") as fh:
             json.dump(manifest, fh)
         os.replace(tmp, self._manifest_path)  # atomic on POSIX
+
+    # --------------------------------------------------- write path
+
+    def _stage_table(
+        self,
+        manifest: dict,
+        name: str,
+        rows: DataFrame,
+        affected: list[int],
+        epoch: int,
+        tag: str,
+        mask: DataFrame | None = None,
+        sort=None,
+        new_n_buckets: int | None = None,
+    ) -> None:
+        """Write one table's new bucket files under ``<table>/<tag>``
+        and put its next entry into ``manifest``; the caller's manifest
+        swap commits it.  Every epoch and maintenance commit goes
+        through here.  ``rows`` replace the affected buckets' state,
+        or, with ``mask``, are appended to them as a sidecar layer
+        while the masked (src, pk) rows join each bucket's deletion
+        vector.  With ``new_n_buckets`` the bucket map is rebuilt under
+        that modulus."""
+        prior = manifest["tables"].get(name)
+        n_b = new_n_buckets or self._entry_n_buckets(prior)
+        bmap = dict(prior["buckets"]) if prior and not new_n_buckets else {}
+        vdir = os.path.join(self.warehouse_dir, name, tag)
+        key = self.catalog.get(name).primary_key
+        written = self._write_buckets(rows, vdir, key, n_b, len(affected), sort)
+        if mask is not None:
+            # deletion vectors: new masks ∪ the affected buckets'
+            # existing dv rows (ONE current dv per bucket)
+            old_dv_paths = [p for b in affected if (p := self._entry_dv(bmap.get(str(b))))]
+            if old_dv_paths:
+                mask = mask.unionByName(
+                    self.spark.read.schema("src LONG, pk STRING").parquet(*old_dv_paths)
+                )
+            dvdir = os.path.join(self.warehouse_dir, name, f"dv{epoch}")
+            dv_written = self._write_buckets(mask, dvdir, "pk", n_b, len(affected))
+        for b in affected:
+            # a bucket whose rows were all deleted writes no dir
+            val = os.path.join(vdir, f"__b={b}") if b in written else None
+            if mask is not None:
+                # sidecar: append the delta layer, swap the dv
+                old = bmap.get(str(b))
+                layers = self._entry_layers(old) + ([{"epoch": epoch, "path": val}] if val else [])
+                dv = os.path.join(dvdir, f"__b={b}") if b in dv_written else self._entry_dv(old)
+                val = {"files": layers, "dv": dv} if layers or dv else None
+            bmap[str(b)] = val
+        manifest["tables"][name] = self._table_entry(epoch, bmap, n_b, prior=prior)
+
+    def _write_buckets(
+        self, df: DataFrame, vdir: str, key_col: str, n_b: int, n_parts: int, sort=None
+    ) -> set[int]:
+        """Hash ``df`` into ``n_b`` buckets on ``key_col``, write one
+        ``vdir/__b=<id>`` directory per non-empty bucket from
+        ``max(2, n_parts)`` tasks, and return the bucket ids written.
+        Pre-sorting by ``(__b, sort)`` satisfies the file writer's
+        required ordering, so no extra sort is inserted and rows land
+        ``sort``-clustered inside each bucket file."""
+        out = df.withColumn("__b", self.bucket_expr(key_col, n_b)).repartition(
+            max(2, n_parts), F.col("__b")
+        )
+        if sort is not None:
+            out = out.sortWithinPartitions("__b", sort)
+        out.write.mode("overwrite").partitionBy("__b").parquet(vdir)
+        if not os.path.isdir(vdir):
+            return set()
+        return {int(d.split("=", 1)[1]) for d in os.listdir(vdir) if d.startswith("__b=")}
+
+    @staticmethod
+    def _table_entry(
+        epoch: int,
+        buckets: dict,
+        n_buckets: int | None,
+        prior: dict | None = None,
+        history: list[dict] | None = None,
+    ) -> dict:
+        """A table's next manifest entry.  ``prior`` is snapshotted
+        onto the history with its modulus, so reorg rollback restores
+        both.  Rollback passes the retained ``history`` instead: it
+        moves back along the history, not forward.  Snapshots from
+        before the modulus was recorded carry none; restoring one falls
+        back to the store-wide default."""
+        if history is None:
+            history = list(prior.get("history", [])) if prior else []
+            if prior is not None:
+                snap = {"epoch": prior["epoch"], "buckets": dict(prior["buckets"])}
+                if "n_buckets" in prior:
+                    snap["n_buckets"] = prior["n_buckets"]
+                history.append(snap)
+        entry = {"epoch": epoch, "buckets": buckets, "history": history}
+        if n_buckets is not None:
+            entry["n_buckets"] = n_buckets
+        return entry
 
     # ------------------------------------------ bucket-entry helpers
     #
@@ -372,123 +476,11 @@ class TableStateStore:
         is the commit point either way; untouched buckets are carried
         forward by reference, never rewritten."""
         manifest = self.read_manifest()
+        tag = f"v{epoch_id}"
         for name, (delta, mask, affected) in (sidecar_states or {}).items():
-            info = self.catalog.get(name)
-            n_b = self.table_n_buckets(name)
-            prior = manifest["tables"].get(name)
-            prior_bmap = dict(prior["buckets"]) if prior else {}
-            # 1. delta data files, partitioned by bucket
-            vdir = os.path.join(self.warehouse_dir, name, f"v{epoch_id}")
-            (
-                delta.withColumn("__b", self.bucket_expr(info.primary_key, n_b))
-                .repartition(max(2, len(affected)), F.col("__b"))
-                .write.mode("overwrite")
-                .partitionBy("__b")
-                .parquet(vdir)
-            )
-            delta_written = (
-                {
-                    int(d.split("=", 1)[1])
-                    for d in os.listdir(vdir)
-                    if d.startswith("__b=")
-                }
-                if os.path.isdir(vdir)
-                else set()
-            )
-            # 2. deletion vectors: new masks ∪ the affected buckets'
-            # existing dv rows (ONE current dv per bucket)
-            old_dv_paths = [
-                p
-                for b in affected
-                if (p := self._entry_dv(prior_bmap.get(str(b))))
-            ]
-            dv_df = mask.withColumn(
-                "__b", F.pmod(F.xxhash64(F.col("pk")), F.lit(n_b))
-            )
-            if old_dv_paths:
-                old_dv = (
-                    self.spark.read.schema("src LONG, pk STRING")
-                    .parquet(*old_dv_paths)
-                    .withColumn("__b", F.pmod(F.xxhash64(F.col("pk")), F.lit(n_b)))
-                )
-                dv_df = dv_df.unionByName(old_dv)
-            dvdir = os.path.join(self.warehouse_dir, name, f"dv{epoch_id}")
-            (
-                dv_df.repartition(max(2, len(affected)), F.col("__b"))
-                .write.mode("overwrite")
-                .partitionBy("__b")
-                .parquet(dvdir)
-            )
-            dv_written = (
-                {
-                    int(d.split("=", 1)[1])
-                    for d in os.listdir(dvdir)
-                    if d.startswith("__b=")
-                }
-                if os.path.isdir(dvdir)
-                else set()
-            )
-            # 3. manifest: append layers / swap dv per affected bucket
-            bmap = prior_bmap
-            history = prior.get("history", []) if prior else []
-            if prior is not None:
-                history = history + [
-                    {"epoch": prior["epoch"], "buckets": dict(prior["buckets"])}
-                ]
-            for b in affected:
-                old = bmap.get(str(b))
-                layers = self._entry_layers(old)
-                if b in delta_written:
-                    layers = layers + [
-                        {"epoch": epoch_id, "path": os.path.join(vdir, f"__b={b}")}
-                    ]
-                dv_path = (
-                    os.path.join(dvdir, f"__b={b}")
-                    if b in dv_written
-                    else self._entry_dv(old)
-                )
-                if not layers and not dv_path:
-                    bmap[str(b)] = None
-                else:
-                    bmap[str(b)] = {"files": layers, "dv": dv_path}
-            manifest["tables"][name] = {
-                "epoch": epoch_id,
-                "buckets": bmap,
-                "history": history,
-                "n_buckets": n_b,
-            }
+            self._stage_table(manifest, name, delta, affected, epoch_id, tag, mask=mask)
         for name, (df, affected) in new_states.items():
-            info = self.catalog.get(name)
-            n_b = self.table_n_buckets(name)
-            vdir = os.path.join(self.warehouse_dir, name, f"v{epoch_id}")
-            (
-                df.withColumn("__b", self.bucket_expr(info.primary_key, n_b))
-                .repartition(max(2, len(affected)), F.col("__b"))
-                .write.mode("overwrite")
-                .partitionBy("__b")
-                .parquet(vdir)
-            )
-            written = {
-                int(d.split("=", 1)[1])
-                for d in os.listdir(vdir)
-                if d.startswith("__b=")
-            }
-            prior = manifest["tables"].get(name)
-            bmap = dict(prior["buckets"]) if prior else {}
-            history = prior.get("history", []) if prior else []
-            if prior is not None:
-                history = history + [
-                    {"epoch": prior["epoch"], "buckets": dict(prior["buckets"])}
-                ]
-            for b in affected:
-                # a bucket whose rows were all deleted writes no dir
-                bmap[str(b)] = os.path.join(vdir, f"__b={b}") if b in written else None
-            manifest["tables"][name] = {
-                "epoch": epoch_id,
-                "buckets": bmap,
-                "history": history,
-                "n_buckets": n_b,
-            }
+            self._stage_table(manifest, name, df, affected, epoch_id, tag)
         manifest["applied_epochs"] = sorted(set(manifest["applied_epochs"]) | {epoch_id})
         if cursor is not None:
             blocks = manifest.get("epoch_blocks", {})
@@ -567,10 +559,9 @@ class TableStateStore:
         df: DataFrame,
         affected: list[int],
         kind: str,
-        sort_col: str | None = None,
+        sort=None,
         new_n_buckets: int | None = None,
-        sort_expr=None,
-    ) -> str:
+    ) -> None:
         """Shared commit path for non-epoch mutations (OPTIMIZE / TTL /
         REBUCKET): write the affected buckets' new state under
         ``<table>/<kind><seq>``, snapshot the prior bucket map to
@@ -579,44 +570,14 @@ class TableStateStore:
         progress, so epoch replay/idempotency semantics are unaffected.
         With ``new_n_buckets`` the bucket map is REPLACED under the new
         modulus (``affected`` then lists the new bucket ids)."""
-        info = self.catalog.get(name)
         manifest = self.read_manifest()
         seq = int(manifest.get("mutation_seq", 0)) + 1
         manifest["mutation_seq"] = seq
-        n_b = new_n_buckets or self.table_n_buckets(name)
-        vdir = os.path.join(self.warehouse_dir, name, f"{kind}{seq}")
-        out = df.withColumn(
-            "__b", self.bucket_expr(info.primary_key, n_b)
-        ).repartition(max(2, len(affected)), F.col("__b"))
-        if sort_expr is not None:
-            # Z-order maintenance: cluster inside each bucket by the
-            # Morton key so row-group min/max stats stay narrow on
-            # EVERY participating column (functions/zorder.py).
-            out = out.sortWithinPartitions("__b", sort_expr)
-        elif sort_col is not None:
-            # Pre-sorting by (__b, sort_col) satisfies the file
-            # writer's required ordering, so no extra sort is inserted
-            # and rows land pk-clustered inside each bucket file.
-            out = out.sortWithinPartitions("__b", sort_col)
-        out.write.mode("overwrite").partitionBy("__b").parquet(vdir)
-        written = {
-            int(d.split("=", 1)[1]) for d in os.listdir(vdir) if d.startswith("__b=")
-        }
-        prior = manifest["tables"][name]
-        bmap = {} if new_n_buckets else dict(prior["buckets"])
-        history = prior.get("history", []) + [
-            {"epoch": prior["epoch"], "buckets": dict(prior["buckets"])}
-        ]
-        for b in affected:
-            bmap[str(b)] = os.path.join(vdir, f"__b={b}") if b in written else None
-        manifest["tables"][name] = {
-            "epoch": prior["epoch"],
-            "buckets": bmap,
-            "history": history,
-            "n_buckets": n_b,
-        }
+        self._stage_table(
+            manifest, name, df, affected, manifest["tables"][name]["epoch"],
+            f"{kind}{seq}", sort=sort, new_n_buckets=new_n_buckets,
+        )
         self._write_manifest(manifest)
-        return vdir
 
     def optimize(
         self,
@@ -686,15 +647,15 @@ class TableStateStore:
             # rows during the compaction rewrite (one extra exchange
             # on the full row, the same cost class as the rewrite)
             state = state.distinct()
-        sort_expr = None
+        sort = info.primary_key
         if zorder:
             from substreams_sink_clickhouse_spark.functions.zorder import zorder_key
 
-            sort_expr = zorder_key(state, zorder)
-        self._commit_maintenance(
-            name, state, affected, "opt",
-            sort_col=info.primary_key, sort_expr=sort_expr,
-        )
+            # Z-order maintenance: cluster inside each bucket by the
+            # Morton key so row-group min/max stats stay narrow on
+            # EVERY participating column (functions/zorder.py).
+            sort = zorder_key(state, zorder)
+        self._commit_maintenance(name, state, affected, "opt", sort=sort)
         after = sum(p["n_files"] for p in self.parts(name))
         return {"files_before": before, "files_after": after}
 
@@ -715,7 +676,7 @@ class TableStateStore:
         if entry is None:
             return 0
         state = self.table_state(name)
-        n_b = self.table_n_buckets(name)
+        n_b = self._entry_n_buckets(entry)
         per_bucket = (
             state.groupBy(self.bucket_expr(info.primary_key, n_b).alias("__b"))
             .agg(
@@ -759,7 +720,7 @@ class TableStateStore:
         if entry is None:
             return 0
         state = self.table_state(name)
-        n_b = self.table_n_buckets(name)
+        n_b = self._entry_n_buckets(entry)
         per_bucket = (
             state.groupBy(self.bucket_expr(info.primary_key, n_b).alias("__b"))
             .agg(F.sum(F.expr(predicate).cast("long")).alias("n_hit"))
@@ -802,15 +763,15 @@ class TableStateStore:
         "n_buckets_after"}``; no-op (None) if the modulus is unchanged
         or the table is empty/unknown."""
         entry = self.read_manifest()["tables"].get(name)
-        if entry is None or new_n_buckets == self.table_n_buckets(name):
+        before = self._entry_n_buckets(entry)
+        if entry is None or new_n_buckets == before:
             return None
-        before = self.table_n_buckets(name)
         self._commit_maintenance(
             name,
             self.table_state(name),
             list(range(new_n_buckets)),
             "rbk",
-            sort_col=self.catalog.get(name).primary_key,
+            sort=self.catalog.get(name).primary_key,
             new_n_buckets=new_n_buckets,
         )
         return {"n_buckets_before": before, "n_buckets_after": new_n_buckets}
@@ -930,7 +891,9 @@ class ChangesIngestPipeline:
         self.checkpoint_dir = checkpoint_dir
         self.module_hash = module_hash
         self.on_batch = on_batch
-        self.stats: dict[str, float] = {"flush_count": 0, "flushed_entries": 0, "flush_seconds": 0.0}
+        #: the sink's one stats object: flush counters, last committed
+        #: block and per-phase seconds (served by serve_metrics)
+        self.stats = SinkStats()
 
     def attach_rollup(self, table: str, rollup) -> None:
         """Attach an :class:`~...streaming.mataggs.IncrementalAggregate`
@@ -947,15 +910,19 @@ class ChangesIngestPipeline:
         """foreachBatch body: one flush window
         (/root/reference/db/flush.go:12-69 + sinker.go:119-131)."""
         t0 = time.time()
-        phases = self.stats.setdefault("phase_seconds", {})
+        phases = self.stats.phase_seconds
 
         def mark(phase: str, since: float) -> float:
             now = time.time()
             phases[phase] = phases.get(phase, 0.0) + (now - since)
             return now
 
-        if self.state.epoch_applied(epoch_id):
+        # the epoch's one manifest read: replay check, bucket moduli
+        # and sidecar eligibility all come from it
+        manifest = self.state.read_manifest()
+        if epoch_id in manifest["applied_epochs"]:
             return  # replay after restart: already committed
+        manifest_tables = manifest["tables"]
         if self.start_block is not None:
             changes = changes.filter(F.col("block_num") >= self.start_block)
         if self.stop_block is not None:
@@ -970,7 +937,9 @@ class ChangesIngestPipeline:
             # against the catalog — same UnknownTableError contract as
             # validate_change_tables), and the cursor head via max_by.
             # It is also the action that materializes the batch cache.
-            bucket = self.state.batch_bucket_expr(list(self.catalog.tables)).alias("b")
+            bucket = self.state.batch_bucket_expr(
+                list(self.catalog.tables), manifest_tables
+            ).alias("b")
             summary = (
                 changes.groupBy("table", bucket)
                 .agg(
@@ -1014,7 +983,6 @@ class ChangesIngestPipeline:
                 # several tables each filter the reduced ops — cache so
                 # the fold is computed once, not once per table
                 live = live.cache()
-            manifest_tables = self.state.read_manifest()["tables"]
 
             def sidecar_eligible(name: str, buckets: list[int]) -> bool:
                 """Deletion-vector commit iff the table has committed
@@ -1130,9 +1098,7 @@ class ChangesIngestPipeline:
             live.unpersist()
         finally:
             changes.unpersist()
-        self.stats["flush_count"] += 1
-        self.stats["flushed_entries"] += n_entries
-        self.stats["flush_seconds"] += time.time() - t0
+        self.stats.record_flush(n_entries, time.time() - t0, head_num)
         if self.on_batch:
             self.on_batch(epoch_id, n_entries)
 
@@ -1168,8 +1134,8 @@ class ChangesIngestPipeline:
 
         ``live=False`` → ``availableNow`` (catch-up: batch the backlog,
         the analog of the 1000-block historical flush); ``live=True`` →
-        processing-time trigger (per-arrival flush, the analog of
-        LIVE_BLOCK_FLUSH_EACH=1).
+        processing-time trigger (per-arrival flush, the analog of the
+        reference's every-block live flush).
 
         Malformed payloads follow ``on_decode_error`` ("fail" = stop
         the stream with the offending payload, the reference's decode
@@ -1178,19 +1144,10 @@ class ChangesIngestPipeline:
         continues — at scale, one poison message must not stall a
         100k-blocks/s backfill, but must stay replayable.
         """
-        reader = self.spark.readStream.schema("value string")
-        if max_files_per_trigger:
-            reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
-        raw = reader.text(changes_path)
-        writer = (
-            raw.writeStream.foreachBatch(self._process_raw_batch)
-            .option("checkpointLocation", self.checkpoint_dir)
+        return self._start_stream(
+            "text", "value string", changes_path, self._process_raw_batch,
+            live, max_files_per_trigger,
         )
-        if live:
-            writer = writer.trigger(processingTime="1 second")
-        else:
-            writer = writer.trigger(availableNow=True)
-        return writer.start()
 
     def start_protobuf(
         self,
@@ -1221,13 +1178,6 @@ class ChangesIngestPipeline:
             decode_database_changes_protobuf_pure,
         )
 
-        reader = self.spark.readStream.schema(
-            "block_num long, block_id string, value binary"
-        )
-        if max_files_per_trigger:
-            reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
-        raw = reader.parquet(changes_path)
-
         def process(raw_df: DataFrame, epoch_id: int) -> None:
             if descriptor_path is not None:
                 decoded = decode_database_changes_protobuf(raw_df, descriptor_path)
@@ -1235,8 +1185,30 @@ class ChangesIngestPipeline:
                 decoded = decode_database_changes_protobuf_pure(raw_df)
             self.process_batch(decoded, epoch_id)
 
-        writer = raw.writeStream.foreachBatch(process).option(
-            "checkpointLocation", self.checkpoint_dir
+        return self._start_stream(
+            "parquet", "block_num long, block_id string, value binary",
+            changes_path, process, live, max_files_per_trigger,
+        )
+
+    def _start_stream(
+        self,
+        fmt: str,
+        schema: str,
+        changes_path: str,
+        process: Callable[[DataFrame, int], None],
+        live: bool,
+        max_files_per_trigger: int | None,
+    ):
+        """Run ``process`` per micro-batch of a checkpointed file
+        stream; the trigger sets the flush window."""
+        reader = self.spark.readStream.schema(schema)
+        if max_files_per_trigger:
+            reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
+        writer = (
+            reader.format(fmt)
+            .load(changes_path)
+            .writeStream.foreachBatch(process)
+            .option("checkpointLocation", self.checkpoint_dir)
         )
         if live:
             writer = writer.trigger(processingTime="1 second")
@@ -1355,11 +1327,12 @@ class ChangesIngestPipeline:
             rollback = [h for h in candidates if h["epoch"] <= target_epoch]
             if rollback:
                 newest = max(rollback, key=lambda h: h["epoch"])
-                manifest["tables"][name] = {
-                    "epoch": newest["epoch"],
-                    "buckets": dict(newest["buckets"]),
-                    "history": candidates,
-                }
+                manifest["tables"][name] = TableStateStore._table_entry(
+                    newest["epoch"],
+                    dict(newest["buckets"]),
+                    newest.get("n_buckets"),
+                    history=candidates,
+                )
             else:
                 del manifest["tables"][name]
         manifest["applied_epochs"] = [e for e in manifest["applied_epochs"] if e <= target_epoch]

@@ -338,6 +338,59 @@ def test_multi_table_window_mixes_sidecar_and_rewrite(spark, tmp_path):
     assert pipe.table("kv2").count() == 4
 
 
+def test_two_table_epoch_failing_in_commit_leaves_no_trace(spark, tmp_path, changes_df):
+    """A window over TWO tables whose commit fails: ``kv`` takes the
+    sidecar path while ``kv2`` (initial load) takes the rewrite path
+    with a duplicate CREATE, so the merge guard raises from inside the
+    epoch's bucket writes.  Neither table's manifest entry nor the
+    cursor may move; replaying the corrected window then lands it
+    exactly once."""
+    cat = Catalog()
+    cat.register(TableInfo("kv", SCHEMA, "id"))
+    cat.register(TableInfo("kv2", SCHEMA, "id"))
+    pipe = ChangesIngestPipeline(
+        spark,
+        cat,
+        warehouse_dir=str(tmp_path / "wh"),
+        checkpoint_dir=str(tmp_path / "ckpt"),
+        module_hash="m",
+        n_buckets=4,
+        write_mode="auto",
+    )
+
+    def row(block, ordinal, table, pk, op, v):
+        return (block, f"0x{block}", ordinal, table, pk, op, {"v": v, "s": "x"})
+
+    pipe.process_batch(
+        changes_df([row(1, i, "kv", f"k{i}", "CREATE", str(i)) for i in range(8)]),
+        epoch_id=0,
+    )
+    manifest_before = pipe.state.read_manifest()
+    update = row(2, 1, "kv", "k1", "UPDATE", "999")
+    with pytest.raises(Exception, match="invalid change sequence"):
+        pipe.process_batch(
+            changes_df([update, row(2, 2, "kv2", "p1", "CREATE", "1"),
+                        row(2, 3, "kv2", "p1", "CREATE", "2")]),
+            epoch_id=1,
+        )
+    assert pipe.state.read_manifest() == manifest_before
+    assert pipe.cursors.get_cursor("m").block_num == 1
+    assert pipe.stats.flush_count == 1
+
+    corrected = changes_df([update, row(2, 2, "kv2", "p1", "CREATE", "1")])
+    pipe.process_batch(corrected, epoch_id=1)
+    pipe.process_batch(corrected, epoch_id=1)  # replay: a no-op
+    assert pipe.stats.flush_count == 2
+    man = pipe.state.read_manifest()
+    assert man["applied_epochs"] == [0, 1]
+    assert any(isinstance(v, dict) for v in man["tables"]["kv"]["buckets"].values())
+    assert all(v is None or isinstance(v, str) for v in man["tables"]["kv2"]["buckets"].values())
+    assert pipe.cursors.get_cursor("m").block_num == 2
+    kv = {(r["id"], r["v"]) for r in pipe.table("kv").collect()}
+    assert kv == {(f"k{i}", 999 if i == 1 else i) for i in range(8)}
+    assert {(r["id"], r["v"]) for r in pipe.table("kv2").collect()} == {("p1", 1)}
+
+
 def test_bucket_subset_read_through_dv(spark, tmp_path):
     """bucket_state on a SUBSET of buckets must apply each bucket's dv
     (the reconcile-join read path at the next epoch)."""

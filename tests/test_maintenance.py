@@ -132,6 +132,40 @@ def test_rebucket_rescales_and_ingest_continues(spark, tmp_path):
     assert rows["k0"] == 777 and len(rows) == 8
 
 
+def test_reorg_rollback_restores_rebucketed_modulus(spark, tmp_path):
+    """History snapshots carry their modulus: rolling back to an epoch
+    committed after a rebucket restores the 4-bucket map together with
+    its modulus, so the next epoch hashes every key to the bucket that
+    holds it and every update lands."""
+    eng, pipe = _engine_with_epochs(spark, tmp_path, n_epochs=2, keys_per_epoch=8)
+    pipe.state.rebucket("block_meta", 4)
+    stream = tmp_path / "changes"
+
+    def update_all(block):
+        (stream / f"b_post{block}.jsonl").write_text(
+            _msg(
+                block,
+                [("block_meta", f"k{k}", 1, "UPDATE", {"number": str(block * 100 + k)})
+                 for k in range(8)],
+            )
+        )
+        return eng.ingest(str(stream), _catalog())
+
+    update_all(3)
+    pipe = update_all(4)
+    pipe.handle_block_undo_signal(last_valid_block=3)
+    assert pipe.state.table_n_buckets("block_meta") == 4
+    entry = pipe.state.read_manifest()["tables"]["block_meta"]
+    assert set(int(b) for b in entry["buckets"]) <= set(range(4))
+    assert {r["id"]: r["number"] for r in pipe.table("block_meta").collect()} == {
+        f"k{k}": 300 + k for k in range(8)
+    }
+    pipe = update_all(5)
+    assert {r["id"]: r["number"] for r in pipe.table("block_meta").collect()} == {
+        f"k{k}": 500 + k for k in range(8)
+    }
+
+
 def test_optimize_sorts_by_pk_within_bucket(spark, tmp_path):
     import pyarrow.parquet as pq
 

@@ -3,9 +3,7 @@ series (flush count / flushed entries / flush duration,
 /root/reference/sinker/metrics.go:13-15) and the periodic stats line
 (/root/reference/sinker/stats.go:38-70)."""
 
-from types import SimpleNamespace
-
-from substreams_sink_clickhouse_spark.streaming.metrics import SinkStats, make_listener
+from substreams_sink_clickhouse_spark.streaming.metrics import SinkStats
 
 
 def test_sink_stats_counters():
@@ -31,16 +29,6 @@ def test_log_line_shape():
     line = stats.log_line()
     for token in ("flushes=1", "entries=10", "rate=", "avg_flush=", "last_block=7"):
         assert token in line
-
-
-def test_listener_feeds_stats(spark):
-    stats = SinkStats()
-    listener = make_listener(stats)
-    progress = SimpleNamespace(numInputRows=42, batchDuration=500)
-    listener.onQueryProgress(SimpleNamespace(progress=progress))
-    assert stats.flush_count == 1
-    assert stats.flushed_entries == 42
-    assert abs(stats.flush_duration_s - 0.5) < 1e-9
 
 
 def test_prometheus_exposition_names_match_reference():

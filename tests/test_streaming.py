@@ -102,7 +102,7 @@ def test_restart_recovery_no_duplicates(spark, tmp_path, block_meta_catalog):
     pipe = _pipeline(spark, block_meta_catalog, tmp_path)
     pipe.run_to_completion(str(stream_dir))
     assert pipe.table("block_meta").count() == 1
-    flushes_after_first = pipe.stats["flush_count"]
+    flushes_after_first = pipe.stats.flush_count
 
     # new data arrives; a NEW pipeline instance resumes from checkpoint
     (stream_dir / "b2.jsonl").write_text(
@@ -131,7 +131,7 @@ def test_epoch_replay_is_idempotent(spark, tmp_path, block_meta_catalog, changes
     assert pipe.table("block_meta").count() == 1
     pipe.process_batch(batch, epoch_id=0)  # replay
     assert pipe.table("block_meta").count() == 1
-    assert pipe.stats["flush_count"] == 1
+    assert pipe.stats.flush_count == 1
 
 
 def test_cursor_store_roundtrip_and_mismatch(spark, tmp_path):
@@ -176,6 +176,31 @@ def test_merge_violation_fails_stream_batch(spark, tmp_path, block_meta_catalog,
     assert pipe.table("block_meta").count() == 0
 
 
+def test_metrics_scrape_after_three_epochs(spark, tmp_path, block_meta_catalog, changes_df):
+    """The pipeline's stats object is what /metrics serves: three
+    committed epochs count three flushes, and last_block is the head
+    block of the last one."""
+    import urllib.request
+
+    from substreams_sink_clickhouse_spark.streaming.metrics import serve_metrics
+
+    pipe = _pipeline(spark, block_meta_catalog, tmp_path)
+    for epoch, block in enumerate((5, 9, 14)):
+        batch = changes_df(
+            [(block, f"0x{block}", 1, "block_meta", f"k{epoch}", "CREATE", {"number": "1"})]
+        )
+        pipe.process_batch(batch, epoch_id=epoch)
+    server = serve_metrics(pipe.stats, "localhost:0")
+    try:
+        port = server.server_address[1]
+        body = urllib.request.urlopen(f"http://localhost:{port}/metrics", timeout=5).read().decode()
+    finally:
+        server.shutdown()
+    assert "substreams_sink_clickhouse_store_flush_count 3" in body
+    assert "substreams_sink_clickhouse_last_block 14" in body
+    assert set(pipe.stats.phase_seconds) >= {"window_summary", "plan", "commit"}
+
+
 def test_multi_epoch_single_run(spark, tmp_path, block_meta_catalog):
     """maxFilesPerTrigger=1 forces one micro-batch per file within a
     single availableNow run: epochs sequence, later epochs fold onto
@@ -204,7 +229,7 @@ def test_multi_epoch_single_run(spark, tmp_path, block_meta_catalog):
     rows = {r["id"]: r["number"] for r in pipe.table("block_meta").collect()}
     assert rows == {"k1": 11}
     assert pipe.cursors.get_cursor("mod-hash-1").block_num == 3
-    assert pipe.stats["flush_count"] == 3
+    assert pipe.stats.flush_count == 3
 
 
 # -- malformed payloads: fail / drop / dead-letter --------------------
