@@ -229,7 +229,6 @@ def _pipeline(spark, catalog, args):
     config = EngineConfig(
         warehouse_dir=args.warehouse,
         checkpoint_dir=args.checkpoint,
-        on_module_hash_mismatch=getattr(args, "on_module_hash_mismatch", "error"),
         n_buckets=getattr(args, "n_buckets", 16),
         clickhouse_dsn=getattr(args, "dsn", None),
         start_block=start_block,
@@ -278,10 +277,11 @@ def cmd_setup(spark, args) -> int:
 
 
 def cmd_cursors(spark, args) -> int:
+    from substreams_sink_clickhouse_spark.catalog import Catalog
     from substreams_sink_clickhouse_spark.streaming.cursors import CursorStore
-    import os
+    from substreams_sink_clickhouse_spark.streaming.pipeline import TableStateStore
 
-    store = CursorStore(spark, os.path.join(args.warehouse, "cursors"))
+    store = CursorStore(TableStateStore(spark, args.warehouse, Catalog()))
     if args.action == "list":
         rows = [
             {

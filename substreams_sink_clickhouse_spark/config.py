@@ -80,7 +80,6 @@ class EngineConfig:
 
     warehouse_dir: str = "/tmp/sscs_warehouse"
     checkpoint_dir: str = "/tmp/sscs_checkpoints"
-    on_module_hash_mismatch: str = "error"  # error | warn | ignore
     #: pk-buckets per table: per-epoch rewrite cost is O(touched
     #: buckets / n_buckets of the table); size so one bucket's state
     #: fits an executor comfortably (at 100 TB: thousands).

@@ -38,3 +38,13 @@ class CursorTableError(EngineError):
 
 class DSNError(EngineError):
     """Malformed ClickHouse DSN."""
+
+
+class ManifestConflictError(EngineError):
+    """A staged commit's base manifest entry changed before its swap:
+    another writer committed to the same table in between.  Nothing
+    was committed; re-plan from the current manifest and retry."""
+
+
+class EnvVarError(EngineError):
+    """An environment variable holds a value the engine cannot use."""

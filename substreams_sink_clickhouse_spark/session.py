@@ -13,6 +13,8 @@ import os
 
 from pyspark.sql import SparkSession
 
+from substreams_sink_clickhouse_spark.errors import EnvVarError
+
 #: Runtime-settable confs every engine query depends on.
 _RUNTIME_CONFS = {
     # Deterministic timestamp semantics regardless of host timezone —
@@ -102,6 +104,22 @@ def iterate_session(spark: SparkSession) -> SparkSession:
     return got
 
 
+def _env_positive_int(name: str, default: int) -> int:
+    """The positive integer in environment variable ``name``, or
+    ``default`` when it is unset or empty.  Any other value raises
+    ``EnvVarError`` naming the variable and the value."""
+    raw = os.environ.get(name)
+    if not raw:
+        return default
+    try:
+        value = int(raw)
+        if value < 1:
+            raise ValueError(value)
+    except ValueError:
+        raise EnvVarError(f"${name} must be a positive integer, got {raw!r}") from None
+    return value
+
+
 #: applicationId -> memoized streaming child session (see stream_session).
 _STREAM_SESSIONS: dict[str, SparkSession] = {}
 
@@ -128,12 +146,11 @@ def stream_session(spark: SparkSession) -> SparkSession:
     if got is None:
         for stale in [k for k in _STREAM_SESSIONS if k != app]:
             del _STREAM_SESSIONS[stale]
-        got = tune_session(spark.newSession())
-        width = os.environ.get("SPARK_GRAFT_STREAM_SHUFFLE")
-        got.conf.set(
-            "spark.sql.shuffle.partitions",
-            str(int(width) if width else spark.sparkContext.defaultParallelism),
+        width = _env_positive_int(
+            "SPARK_GRAFT_STREAM_SHUFFLE", spark.sparkContext.defaultParallelism
         )
+        got = tune_session(spark.newSession())
+        got.conf.set("spark.sql.shuffle.partitions", str(width))
         _STREAM_SESSIONS[app] = got
     return got
 
@@ -154,7 +171,7 @@ def get_spark(
         cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
         master = os.environ.get("SPARK_GRAFT_MASTER", f"local[{cpus}]")
     if shuffle_partitions is None:
-        shuffle_partitions = int(os.environ.get("SPARK_GRAFT_SHUFFLE", "32"))
+        shuffle_partitions = _env_positive_int("SPARK_GRAFT_SHUFFLE", 32)
 
     builder = (
         SparkSession.builder.appName(app_name)

@@ -1,28 +1,31 @@
-"""Cursor checkpoint table (reference O10/O11).
+"""Stream cursors (reference O10/O11).
 
 The reference keeps one cursor row per output-module hash in a
 ``cursors(id, cursor, block_num, block_id)`` table, updated in the same
 transaction as each flush (/root/reference/db/cursor.go:120-125,
-db/flush.go:52-58).  Here the cursors table is a tiny single-file
-parquet dataset (the reference itself suggests a Memory-engine table,
-README.md:94) written atomically via write-new + rename; Structured
-Streaming's checkpoint gives restart offsets, while this table gives
-the *queryable* stream position and the module-hash mismatch policy.
+db/flush.go:52-58).  Here the rows live in the warehouse manifest, as
+``cursors: {module_hash: {cursor, block_num, block_id}}``, so an
+epoch's cursor is committed by the same manifest swap as its table
+state: there is one commit point, and a crash can never leave the
+cursor ahead of the data.  ``CursorStore`` is a view over that map; it
+gives the *queryable* stream position and the module-hash mismatch
+policy, while Structured Streaming's checkpoint gives restart offsets.
+
+Warehouses written before the cursors moved kept them in a parquet
+table at ``<warehouse>/cursors``.  While the manifest has no
+``cursors`` key that table is read (read-only, shape-checked); the next
+manifest edit carries its rows into the manifest.
 """
 
 from __future__ import annotations
 
 import os
-import shutil
-import uuid
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
+from pyspark.sql import SparkSession
 
-from substreams_sink_clickhouse_spark.catalog import CURSORS_SCHEMA, validate_cursors_schema
+from substreams_sink_clickhouse_spark.catalog import validate_cursors_schema
 from substreams_sink_clickhouse_spark.errors import EngineError
-from substreams_sink_clickhouse_spark.functions.localdata import empty_df, local_df
 
 
 @dataclass
@@ -32,37 +35,46 @@ class Cursor:
     block_num: int
     block_id: str
 
+    @classmethod
+    def at_epoch(cls, module_hash: str, epoch_id: int, block_num: int, block_id: str) -> "Cursor":
+        """The cursor a committed epoch leaves: its head block."""
+        return cls(module_hash, f"epoch:{epoch_id}:block:{block_num}", block_num, block_id)
+
+    def row(self) -> dict:
+        """This cursor's value in the manifest's ``cursors`` map."""
+        return {"cursor": self.cursor, "block_num": self.block_num, "block_id": self.block_id}
+
 
 class ModuleHashMismatch(EngineError):
     """No cursor for the requested module hash, but others exist
     (policy 'error', /root/reference/db/cursor.go:48-90)."""
 
 
+def legacy_cursor_rows(spark: SparkSession, warehouse_dir: str) -> dict[str, dict]:
+    """Rows of an older warehouse's parquet cursors table
+    (``<warehouse>/cursors``), keyed by module hash; ``{}`` when there
+    is none.  Raises ``CursorTableError`` on a malformed table."""
+    path = os.path.join(warehouse_dir, "cursors")
+    if not (os.path.isdir(path) and any(f.endswith(".parquet") for f in os.listdir(path))):
+        return {}
+    df = spark.read.parquet(path)
+    validate_cursors_schema(df.schema)
+    return {r["id"]: Cursor(*r).row() for r in df.collect()}
+
+
 class CursorStore:
-    """Parquet-backed cursors table with atomic replace."""
+    """The cursors table, as a view over a ``TableStateStore``'s
+    manifest; every edit goes through its locked manifest writer."""
 
-    def __init__(self, spark: SparkSession, path: str):
-        self.spark = spark
-        self.path = path
-
-    def _exists(self) -> bool:
-        return os.path.isdir(self.path) and any(
-            f.endswith(".parquet") for f in os.listdir(self.path)
-        )
-
-    def read(self) -> DataFrame:
-        if not self._exists():
-            return empty_df(self.spark, CURSORS_SCHEMA)
-        df = self.spark.read.parquet(self.path)
-        validate_cursors_schema(df.schema)
-        return df
+    def __init__(self, state):
+        self.state = state
 
     def all_cursors(self) -> dict[str, Cursor]:
         """GetAllCursors (db/cursor.go:26-46)."""
-        return {
-            r["id"]: Cursor(r["id"], r["cursor"], r["block_num"], r["block_id"])
-            for r in self.read().collect()
-        }
+        rows = self.state.read_manifest().get("cursors")
+        if rows is None:
+            rows = legacy_cursor_rows(self.state.spark, self.state.warehouse_dir)
+        return {k: Cursor(k, **v) for k, v in rows.items()}
 
     def get_cursor(self, module_hash: str, on_mismatch: str = "error") -> Cursor | None:
         """GetCursor with mismatch policy (db/cursor.go:48-101).
@@ -88,35 +100,17 @@ class CursorStore:
         return max(cursors.values(), key=lambda c: (c.block_num, c.id))
 
     def write_cursor(self, cursor: Cursor) -> None:
-        """Upsert one cursor row, atomically replacing the table
-        (InsertCursor/UpdateCursor, db/cursor.go:104-125)."""
-        current = self.read().filter(F.col("id") != cursor.id)
-        updated = current.unionByName(
-            local_df(
-                self.spark,
-                [(cursor.id, cursor.cursor, cursor.block_num, cursor.block_id)],
-                CURSORS_SCHEMA,
-            )
-        )
-        tmp = f"{self.path}__tmp_{uuid.uuid4().hex[:8]}"
-        updated.coalesce(1).write.mode("overwrite").parquet(tmp)
-        old = f"{self.path}__old_{uuid.uuid4().hex[:8]}"
-        if os.path.isdir(self.path):
-            os.rename(self.path, old)
-        os.rename(tmp, self.path)
-        if os.path.isdir(old):
-            shutil.rmtree(old, ignore_errors=True)
+        """Upsert one cursor row (InsertCursor/UpdateCursor,
+        db/cursor.go:104-125)."""
+        with self.state.edit_manifest() as manifest:
+            manifest["cursors"][cursor.id] = cursor.row()
 
     def delete_cursor(self, module_hash: str) -> None:
         """DeleteCursor (db/cursor.go:127-135)."""
-        remaining = self.read().filter(F.col("id") != module_hash)
-        tmp = f"{self.path}__tmp_{uuid.uuid4().hex[:8]}"
-        remaining.coalesce(1).write.mode("overwrite").parquet(tmp)
-        if os.path.isdir(self.path):
-            shutil.rmtree(self.path)
-        os.rename(tmp, self.path)
+        with self.state.edit_manifest() as manifest:
+            manifest["cursors"].pop(module_hash, None)
 
     def delete_all(self) -> None:
         """DeleteAllCursors (db/cursor.go:137-143)."""
-        if os.path.isdir(self.path):
-            shutil.rmtree(self.path)
+        with self.state.edit_manifest() as manifest:
+            manifest["cursors"] = {}

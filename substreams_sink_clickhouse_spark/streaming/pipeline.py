@@ -9,11 +9,20 @@ effectively-once is achieved the way Spark sinks do it:
 * every micro-batch (epoch) writes each affected table's NEW state to
   a fresh versioned directory ``<warehouse>/<table>/v<epoch>``;
 * a tiny JSON manifest is then swapped atomically (``os.replace``) to
-  point readers at the new versions + record the applied epoch;
+  point readers at the new versions and record the applied epoch, its
+  head block and the module's cursor row — the epoch's one commit
+  point, so the cursor can never run ahead of the state;
 * on restart/replay of an epoch the manifest shows it already applied
   and the batch becomes a no-op (idempotent replay over the
   at-least-once file source — same net semantics as the reference's
   transactional cursor).
+
+Every manifest edit — epoch commit, maintenance, vacuum, reorg
+rollback, cursor edit — goes through ``TableStateStore.edit_manifest``:
+read, edit and swap under one ``flock`` on ``<warehouse>/manifest.lock``.
+Commits stage their bucket files first and apply their entries onto the
+manifest as re-read under the lock; one whose table changed since it
+was planned raises ``ManifestConflictError`` rather than overwrite.
 
 Flush cadence (O9): the reference flushes every 1000 blocks during
 catch-up and every block when live (sinker/sinker.go:19-22,180-194).
@@ -30,11 +39,14 @@ Delta/Iceberg formalize; we keep it explicit and dependency-free.
 
 from __future__ import annotations
 
+import fcntl
 import json
 import os
 import tempfile
 import time
-from typing import Callable
+import uuid
+from contextlib import contextmanager
+from typing import Callable, NamedTuple
 
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
@@ -47,9 +59,13 @@ from substreams_sink_clickhouse_spark.operators.merge import (
     guard_merge_errors,
     reduce_changes,
 )
-from substreams_sink_clickhouse_spark.errors import UnknownTableError
+from substreams_sink_clickhouse_spark.errors import ManifestConflictError, UnknownTableError
 from substreams_sink_clickhouse_spark.sinks.clickhouse import cursor_update_statement
-from substreams_sink_clickhouse_spark.streaming.cursors import Cursor, CursorStore
+from substreams_sink_clickhouse_spark.streaming.cursors import (
+    Cursor,
+    CursorStore,
+    legacy_cursor_rows,
+)
 from substreams_sink_clickhouse_spark.streaming.metrics import SinkStats
 
 #: Deletion-vector layer cap: a bucket carrying this many data layers
@@ -112,6 +128,26 @@ def _observed_rows(obs) -> int:
         return 0
 
 
+class _Staged(NamedTuple):
+    """One table's commit, written to disk but not yet in the
+    manifest: its next entry's epoch, bucket map and modulus, the
+    entry it was planned from (``base``) and the directories it
+    wrote."""
+
+    name: str
+    base: dict | None
+    epoch: int
+    buckets: dict
+    n_buckets: int
+    paths: list[str]
+
+
+def _entry_state(entry: dict | None):
+    """What a staged commit depends on in a table entry: everything
+    but its history, which vacuum may prune meanwhile."""
+    return None if entry is None else (entry["epoch"], entry.get("n_buckets"), entry["buckets"])
+
+
 class TableStateStore:
     """Versioned, hash-bucketed parquet table state with an atomic JSON
     manifest.
@@ -136,9 +172,9 @@ class TableStateStore:
     One write path: every commit — epoch (rewrite or sidecar) and
     maintenance (OPTIMIZE / TTL / UPDATE / REBUCKET) — stages each
     table through ``_stage_table``, which writes bucket directories
-    with ``_write_buckets`` and builds the table's next manifest entry
-    with ``_table_entry``; reorg rollback builds its entry with
-    ``_table_entry`` too.
+    with ``_write_buckets``, then applies it with ``_commit_staged``
+    inside ``edit_manifest``, the one manifest writer; reorg rollback
+    builds its entry with ``_table_entry`` too.
 
     Round 5 adds DELETION-VECTOR commits (Delta/Iceberg
     merge-on-read, dependency-free): a bucket value may be a layered
@@ -210,17 +246,31 @@ class TableStateStore:
         with open(self._manifest_path, encoding="utf-8") as fh:
             return json.load(fh)
 
-    def _write_manifest(self, manifest: dict) -> None:
-        fd, tmp = tempfile.mkstemp(dir=self.warehouse_dir, suffix=".manifest")
-        with os.fdopen(fd, "w", encoding="utf-8") as fh:
-            json.dump(manifest, fh)
-        os.replace(tmp, self._manifest_path)  # atomic on POSIX
+    @contextmanager
+    def edit_manifest(self):
+        """The one manifest writer: yields the manifest, read under an
+        exclusive ``flock`` on ``<warehouse>/manifest.lock``, for the
+        caller to edit in place, then swaps it in atomically before
+        releasing the lock.  Writers in this process and in others
+        take turns, each editing what the last one committed; an
+        exception in the edit commits nothing.  A manifest without a
+        ``cursors`` map gets the legacy cursors table's rows."""
+        with open(os.path.join(self.warehouse_dir, "manifest.lock"), "a") as lock:
+            fcntl.flock(lock, fcntl.LOCK_EX)  # released when the file closes
+            manifest = self.read_manifest()
+            if "cursors" not in manifest:
+                manifest["cursors"] = legacy_cursor_rows(self.spark, self.warehouse_dir)
+            yield manifest
+            fd, tmp = tempfile.mkstemp(dir=self.warehouse_dir, suffix=".manifest")
+            with os.fdopen(fd, "w", encoding="utf-8") as fh:
+                json.dump(manifest, fh)
+            os.replace(tmp, self._manifest_path)  # atomic on POSIX
 
     # --------------------------------------------------- write path
 
     def _stage_table(
         self,
-        manifest: dict,
+        prior: dict | None,
         name: str,
         rows: DataFrame,
         affected: list[int],
@@ -229,21 +279,21 @@ class TableStateStore:
         mask: DataFrame | None = None,
         sort=None,
         new_n_buckets: int | None = None,
-    ) -> None:
+    ) -> _Staged:
         """Write one table's new bucket files under ``<table>/<tag>``
-        and put its next entry into ``manifest``; the caller's manifest
-        swap commits it.  Every epoch and maintenance commit goes
-        through here.  ``rows`` replace the affected buckets' state,
-        or, with ``mask``, are appended to them as a sidecar layer
-        while the masked (src, pk) rows join each bucket's deletion
-        vector.  With ``new_n_buckets`` the bucket map is rebuilt under
-        that modulus."""
-        prior = manifest["tables"].get(name)
+        on top of its ``prior`` manifest entry, and return the staged
+        entry for ``_commit_staged``.  Every epoch and maintenance
+        commit goes through here.  ``rows`` replace the affected
+        buckets' state, or, with ``mask``, are appended to them as a
+        sidecar layer while the masked (src, pk) rows join each
+        bucket's deletion vector.  With ``new_n_buckets`` the bucket
+        map is rebuilt under that modulus."""
         n_b = new_n_buckets or self._entry_n_buckets(prior)
         bmap = dict(prior["buckets"]) if prior and not new_n_buckets else {}
         vdir = os.path.join(self.warehouse_dir, name, tag)
         key = self.catalog.get(name).primary_key
         written = self._write_buckets(rows, vdir, key, n_b, len(affected), sort)
+        paths = [os.path.join(vdir, f"__b={b}") for b in written]
         if mask is not None:
             # deletion vectors: new masks ∪ the affected buckets'
             # existing dv rows (ONE current dv per bucket)
@@ -254,6 +304,7 @@ class TableStateStore:
                 )
             dvdir = os.path.join(self.warehouse_dir, name, f"dv{epoch}")
             dv_written = self._write_buckets(mask, dvdir, "pk", n_b, len(affected))
+            paths += [os.path.join(dvdir, f"__b={b}") for b in dv_written]
         for b in affected:
             # a bucket whose rows were all deleted writes no dir
             val = os.path.join(vdir, f"__b={b}") if b in written else None
@@ -264,7 +315,31 @@ class TableStateStore:
                 dv = os.path.join(dvdir, f"__b={b}") if b in dv_written else self._entry_dv(old)
                 val = {"files": layers, "dv": dv} if layers or dv else None
             bmap[str(b)] = val
-        manifest["tables"][name] = self._table_entry(epoch, bmap, n_b, prior=prior)
+        return _Staged(name, prior, epoch, bmap, n_b, paths)
+
+    def _commit_staged(self, manifest: dict, staged: _Staged) -> None:
+        """Apply a staged table entry onto ``manifest``, as read inside
+        ``edit_manifest``.  If the table's entry is no longer the one
+        the commit was planned from (another commit, maintenance or
+        rollback swapped in between), or a directory it wrote is gone
+        (a vacuum ran in between), raise ``ManifestConflictError``:
+        applying it would drop that edit or point at missing files."""
+        current = manifest["tables"].get(staged.name)
+        if _entry_state(current) != _entry_state(staged.base):
+            raise ManifestConflictError(
+                f"table {staged.name!r} changed while a commit was staged on it "
+                f"(planned at epoch {staged.base and staged.base['epoch']}, "
+                f"now epoch {current and current['epoch']}); nothing was committed"
+            )
+        missing = [p for p in staged.paths if not os.path.isdir(p)]
+        if missing:
+            raise ManifestConflictError(
+                f"files staged for table {staged.name!r} were removed before the "
+                f"commit (a vacuum in between?): {missing[:3]}; nothing was committed"
+            )
+        manifest["tables"][staged.name] = self._table_entry(
+            staged.epoch, staged.buckets, staged.n_buckets, prior=current
+        )
 
     def _write_buckets(
         self, df: DataFrame, vdir: str, key_col: str, n_b: int, n_parts: int, sort=None
@@ -461,34 +536,41 @@ class TableStateStore:
         epoch_id: int,
         new_states: dict[str, tuple[DataFrame, list[int]]],
         cursor: Cursor | None,
-        cursor_store: CursorStore | None,
         sidecar_states: dict[str, tuple[DataFrame, DataFrame, list[int]]] | None = None,
+        base: dict | None = None,
     ) -> None:
-        """Write each affected bucket's new state, then swap the
-        manifest + cursor.  ``new_states`` maps table -> (bucket-subset
-        state DF, affected bucket ids) — the full-rewrite path.
-        ``sidecar_states`` maps table -> (delta rows DF, (src, pk)
-        mask DF, affected bucket ids) — the deletion-vector path:
-        per affected bucket this appends ONE small delta file and
-        replaces the bucket's deletion vector with (old dv rows ∪ new
-        masks), so bytes written are O(changed rows), not O(bucket)
-        (see _read_bmap_subset for the read side).  The manifest swap
-        is the commit point either way; untouched buckets are carried
-        forward by reference, never rewritten."""
-        manifest = self.read_manifest()
+        """Write each affected bucket's new state, then commit the
+        epoch with one manifest swap: its table entries, its applied
+        mark, its head block and the cursor row.  ``new_states`` maps
+        table -> (bucket-subset state DF, affected bucket ids) — the
+        full-rewrite path.  ``sidecar_states`` maps table -> (delta
+        rows DF, (src, pk) mask DF, affected bucket ids) — the
+        deletion-vector path: per affected bucket this appends ONE
+        small delta file and replaces the bucket's deletion vector with
+        (old dv rows ∪ new masks), so bytes written are O(changed
+        rows), not O(bucket) (see _read_bmap_subset for the read side).
+        Untouched buckets are carried forward by reference, never
+        rewritten.  ``base`` is the manifest table map the epoch was
+        planned from (default: read now); the swap raises
+        ``ManifestConflictError`` if any staged table changed since."""
+        if base is None:
+            base = self.read_manifest()["tables"]
         tag = f"v{epoch_id}"
-        for name, (delta, mask, affected) in (sidecar_states or {}).items():
-            self._stage_table(manifest, name, delta, affected, epoch_id, tag, mask=mask)
-        for name, (df, affected) in new_states.items():
-            self._stage_table(manifest, name, df, affected, epoch_id, tag)
-        manifest["applied_epochs"] = sorted(set(manifest["applied_epochs"]) | {epoch_id})
-        if cursor is not None:
-            blocks = manifest.get("epoch_blocks", {})
-            blocks[str(epoch_id)] = cursor.block_num
-            manifest["epoch_blocks"] = blocks
-        if cursor is not None and cursor_store is not None:
-            cursor_store.write_cursor(cursor)
-        self._write_manifest(manifest)
+        staged = [
+            self._stage_table(base.get(name), name, delta, affected, epoch_id, tag, mask=mask)
+            for name, (delta, mask, affected) in (sidecar_states or {}).items()
+        ] + [
+            self._stage_table(base.get(name), name, df, affected, epoch_id, tag)
+            for name, (df, affected) in new_states.items()
+        ]
+        with self.edit_manifest() as manifest:
+            for s in staged:
+                self._commit_staged(manifest, s)
+            manifest["applied_epochs"] = sorted(set(manifest["applied_epochs"]) | {epoch_id})
+            if cursor is not None:
+                manifest.setdefault("epoch_blocks", {})[str(epoch_id)] = cursor.block_num
+                manifest.setdefault("epoch_block_ids", {})[str(epoch_id)] = cursor.block_id
+                manifest["cursors"][cursor.id] = cursor.row()
 
     def vacuum(self, keep_epochs: int = 2) -> list[str]:
         """Garbage-collect unreferenced bucket versions (the
@@ -502,7 +584,6 @@ class TableStateStore:
         many epochs have run."""
         import shutil
 
-        manifest = self.read_manifest()
         deleted: list[str] = []
 
         def _bmap_paths(bmap: dict) -> set[str]:
@@ -515,35 +596,37 @@ class TableStateStore:
                     refs.add(dv)
             return refs
 
-        for name, entry in manifest["tables"].items():
-            history = entry.get("history", [])
-            keep = (
-                sorted(history, key=lambda h: h["epoch"])[-keep_epochs:]
-                if keep_epochs
-                else []
-            )
-            referenced = _bmap_paths(entry["buckets"])
-            for snap in keep:
-                referenced |= _bmap_paths(snap["buckets"])
-            table_dir = os.path.join(self.warehouse_dir, name)
-            if os.path.isdir(table_dir):
-                for vname in sorted(os.listdir(table_dir)):
-                    vdir = os.path.join(table_dir, vname)
-                    # data versions (v*) AND deletion-vector versions (dv*)
-                    if not (
-                        (vname.startswith("v") or vname.startswith("dv"))
-                        and os.path.isdir(vdir)
-                    ):
-                        continue
-                    for bname in sorted(os.listdir(vdir)):
-                        bdir = os.path.join(vdir, bname)
-                        if bname.startswith("__b=") and bdir not in referenced:
-                            shutil.rmtree(bdir, ignore_errors=True)
-                            deleted.append(bdir)
-                    if not any(d.startswith("__b=") for d in os.listdir(vdir)):
-                        shutil.rmtree(vdir, ignore_errors=True)
-            entry["history"] = keep
-        self._write_manifest(manifest)
+        # under the lock, so no commit can swap in a reference to a
+        # directory this pass deletes (``_commit_staged`` checks)
+        with self.edit_manifest() as manifest:
+            for name, entry in manifest["tables"].items():
+                history = entry.get("history", [])
+                keep = (
+                    sorted(history, key=lambda h: h["epoch"])[-keep_epochs:]
+                    if keep_epochs
+                    else []
+                )
+                referenced = _bmap_paths(entry["buckets"])
+                for snap in keep:
+                    referenced |= _bmap_paths(snap["buckets"])
+                table_dir = os.path.join(self.warehouse_dir, name)
+                if os.path.isdir(table_dir):
+                    for vname in sorted(os.listdir(table_dir)):
+                        vdir = os.path.join(table_dir, vname)
+                        # data versions (v*) AND deletion-vector versions (dv*)
+                        if not (
+                            (vname.startswith("v") or vname.startswith("dv"))
+                            and os.path.isdir(vdir)
+                        ):
+                            continue
+                        for bname in sorted(os.listdir(vdir)):
+                            bdir = os.path.join(vdir, bname)
+                            if bname.startswith("__b=") and bdir not in referenced:
+                                shutil.rmtree(bdir, ignore_errors=True)
+                                deleted.append(bdir)
+                        if not any(d.startswith("__b=") for d in os.listdir(vdir)):
+                            shutil.rmtree(vdir, ignore_errors=True)
+                entry["history"] = keep
         return deleted
 
     # ------------------------------------------- storage maintenance
@@ -556,6 +639,7 @@ class TableStateStore:
     def _commit_maintenance(
         self,
         name: str,
+        entry: dict,
         df: DataFrame,
         affected: list[int],
         kind: str,
@@ -564,20 +648,27 @@ class TableStateStore:
     ) -> None:
         """Shared commit path for non-epoch mutations (OPTIMIZE / TTL /
         REBUCKET): write the affected buckets' new state under
-        ``<table>/<kind><seq>``, snapshot the prior bucket map to
-        history, swap the manifest atomically.  ``applied_epochs`` is
-        untouched — mutations are storage maintenance, not stream
-        progress, so epoch replay/idempotency semantics are unaffected.
-        With ``new_n_buckets`` the bucket map is REPLACED under the new
-        modulus (``affected`` then lists the new bucket ids)."""
-        manifest = self.read_manifest()
-        seq = int(manifest.get("mutation_seq", 0)) + 1
-        manifest["mutation_seq"] = seq
-        self._stage_table(
-            manifest, name, df, affected, manifest["tables"][name]["epoch"],
-            f"{kind}{seq}", sort=sort, new_n_buckets=new_n_buckets,
+        ``<table>/<kind><seq>-<id>``, snapshot the prior bucket map to
+        history, swap the manifest atomically.  ``entry`` is the table
+        entry the mutation was planned from; if an epoch (or another
+        mutation) commits to the table first, the swap raises
+        ``ManifestConflictError`` instead of overwriting it.
+        ``applied_epochs`` is untouched — mutations are storage
+        maintenance, not stream progress, so epoch replay/idempotency
+        semantics are unaffected.  With ``new_n_buckets`` the bucket
+        map is REPLACED under the new modulus (``affected`` then lists
+        the new bucket ids)."""
+        # the sequence number orders the directories; the random
+        # suffix keeps a concurrent mutation that read the same number
+        # from overwriting the files of the one that wins the swap
+        seq = int(self.read_manifest().get("mutation_seq", 0)) + 1
+        staged = self._stage_table(
+            entry, name, df, affected, entry["epoch"], f"{kind}{seq}-{uuid.uuid4().hex[:8]}",
+            sort=sort, new_n_buckets=new_n_buckets,
         )
-        self._write_manifest(manifest)
+        with self.edit_manifest() as manifest:
+            self._commit_staged(manifest, staged)
+            manifest["mutation_seq"] = int(manifest.get("mutation_seq", 0)) + 1
 
     def optimize(
         self,
@@ -655,7 +746,7 @@ class TableStateStore:
             # Morton key so row-group min/max stats stay narrow on
             # EVERY participating column (functions/zorder.py).
             sort = zorder_key(state, zorder)
-        self._commit_maintenance(name, state, affected, "opt", sort=sort)
+        self._commit_maintenance(name, entry, state, affected, "opt", sort=sort)
         after = sum(p["n_files"] for p in self.parts(name))
         return {"files_before": before, "files_after": after}
 
@@ -690,7 +781,7 @@ class TableStateStore:
         affected = [int(r["__b"]) for r in per_bucket]
         n_expired = sum(int(r["n_exp"]) for r in per_bucket)
         kept = self.bucket_state(name, affected).filter(f"NOT ({expire_predicate})")
-        self._commit_maintenance(name, kept, affected, "ttl")
+        self._commit_maintenance(name, entry, kept, affected, "ttl")
         return n_expired
 
     def apply_update(
@@ -743,7 +834,7 @@ class TableStateStore:
                 )
             ]
         )
-        self._commit_maintenance(name, mutated, affected, "upd")
+        self._commit_maintenance(name, entry, mutated, affected, "upd")
         return n_hit
 
     def rebucket(self, name: str, new_n_buckets: int) -> dict | None:
@@ -768,6 +859,7 @@ class TableStateStore:
             return None
         self._commit_maintenance(
             name,
+            entry,
             self.table_state(name),
             list(range(new_n_buckets)),
             "rbk",
@@ -887,7 +979,7 @@ class ChangesIngestPipeline:
         #: updated with each epoch's CREATE rows (ClickHouse
         #: materialized-view semantics: MVs see inserted rows).
         self._rollups: dict[str, list] = {}
-        self.cursors = CursorStore(spark, os.path.join(warehouse_dir, "cursors"))
+        self.cursors = CursorStore(self.state)
         self.checkpoint_dir = checkpoint_dir
         self.module_hash = module_hash
         self.on_batch = on_batch
@@ -1052,16 +1144,11 @@ class ChangesIngestPipeline:
                         buckets,
                     )
                 observations.append(obs)
-            cursor = Cursor(
-                id=self.module_hash,
-                cursor=f"epoch:{epoch_id}:block:{head_num}",
-                block_num=head_num,
-                block_id=head_id,
-            )
+            cursor = Cursor.at_epoch(self.module_hash, epoch_id, head_num, head_id)
             tp = mark("plan", tp)
             self.state.commit_epoch(
-                epoch_id, new_states, cursor, self.cursors,
-                sidecar_states=sidecar_states or None,
+                epoch_id, new_states, cursor,
+                sidecar_states=sidecar_states or None, base=manifest_tables,
             )
             for c in delta_caches:
                 c.unpersist()
@@ -1244,7 +1331,8 @@ class ChangesIngestPipeline:
           manifest is the commit point — a replayed epoch rewrites the
           same buckets or no-ops), so the retry loop can never
           double-apply a flush;
-        * the cursor table advances only inside the committed batch.
+        * the cursor row is part of that same manifest swap, so it
+          advances exactly when the epoch's state does.
 
         Together: no loss, no duplication, across any number of
         restarts.  Returns the number of restarts performed.  Raises
@@ -1308,32 +1396,43 @@ class ChangesIngestPipeline:
         deliver final blocks (/root/reference/sinker/sinker.go:176-178).
         Our versioned table state can do better: every committed epoch
         retains its predecessor's directories, so rolling back to the
-        newest epoch at-or-below the fork point is a manifest edit.
+        newest epoch at-or-below the fork point is one manifest edit.
+        That edit also forgets the abandoned fork — its epochs' blocks
+        and every history snapshot newer than the target, so a later
+        rollback or time-travel read cannot land on them — and rewinds
+        this module's cursor row to the target epoch's head.
         """
-        manifest = self.state.read_manifest()
-        history = manifest.get("epoch_blocks", {})
-        valid = [int(e) for e, b in history.items() if b <= last_valid_block]
-        if not valid:
-            raise RuntimeError(
-                f"no committed epoch at or below block {last_valid_block}; "
-                "re-sync from genesis (reference behavior: error out, "
-                "sinker.go:176-178)"
-            )
-        target_epoch = max(valid)
-        for name, entry in list(manifest["tables"].items()):
-            if entry["epoch"] <= target_epoch:
-                continue  # already at or before the fork point
-            candidates = entry.get("history", [])
-            rollback = [h for h in candidates if h["epoch"] <= target_epoch]
-            if rollback:
-                newest = max(rollback, key=lambda h: h["epoch"])
-                manifest["tables"][name] = TableStateStore._table_entry(
-                    newest["epoch"],
-                    dict(newest["buckets"]),
-                    newest.get("n_buckets"),
-                    history=candidates,
+        with self.state.edit_manifest() as manifest:
+            blocks = manifest.get("epoch_blocks", {})
+            valid = [int(e) for e, b in blocks.items() if b <= last_valid_block]
+            if not valid:
+                raise RuntimeError(
+                    f"no committed epoch at or below block {last_valid_block}; "
+                    "re-sync from genesis (reference behavior: error out, "
+                    "sinker.go:176-178)"
                 )
-            else:
-                del manifest["tables"][name]
-        manifest["applied_epochs"] = [e for e in manifest["applied_epochs"] if e <= target_epoch]
-        self.state._write_manifest(manifest)
+            target = max(valid)
+            for name, entry in list(manifest["tables"].items()):
+                # history is chronological, so once the abandoned
+                # fork's snapshots are gone the last one left is the
+                # table's state as of the target epoch
+                kept = [h for h in entry.get("history", []) if h["epoch"] <= target]
+                if entry["epoch"] <= target:
+                    entry["history"] = kept
+                elif kept:
+                    newest = kept.pop()
+                    manifest["tables"][name] = TableStateStore._table_entry(
+                        newest["epoch"],
+                        dict(newest["buckets"]),
+                        newest.get("n_buckets"),
+                        history=kept,
+                    )
+                else:
+                    del manifest["tables"][name]
+            manifest["applied_epochs"] = [e for e in manifest["applied_epochs"] if e <= target]
+            head_id = manifest.get("epoch_block_ids", {}).get(str(target), "")
+            for key in ("epoch_blocks", "epoch_block_ids"):
+                manifest[key] = {e: v for e, v in manifest.get(key, {}).items() if int(e) <= target}
+            manifest["cursors"][self.module_hash] = Cursor.at_epoch(
+                self.module_hash, target, blocks[str(target)], head_id
+            ).row()

@@ -49,3 +49,17 @@ def test_iterate_session_is_memoized_aqe_off_child(spark):
     assert S.iterate_session(spark) is it
     # the parent's conf is untouched
     assert spark.conf.get("spark.sql.adaptive.enabled") == "true"
+
+
+def test_bad_shuffle_env_vars_raise_a_named_error(spark, monkeypatch):
+    import pytest
+
+    from substreams_sink_clickhouse_spark.errors import EnvVarError
+
+    monkeypatch.setenv("SPARK_GRAFT_SHUFFLE", "lots")
+    with pytest.raises(EnvVarError, match=r"\$SPARK_GRAFT_SHUFFLE .*'lots'"):
+        S.get_spark("bad-env")
+    monkeypatch.setattr(S, "_STREAM_SESSIONS", {})
+    monkeypatch.setenv("SPARK_GRAFT_STREAM_SHUFFLE", "0")
+    with pytest.raises(EnvVarError, match=r"\$SPARK_GRAFT_STREAM_SHUFFLE .*'0'"):
+        S.stream_session(spark)

@@ -14,7 +14,10 @@ from substreams_sink_clickhouse_spark.streaming.cursors import (
     CursorStore,
     ModuleHashMismatch,
 )
-from substreams_sink_clickhouse_spark.streaming.pipeline import ChangesIngestPipeline
+from substreams_sink_clickhouse_spark.streaming.pipeline import (
+    ChangesIngestPipeline,
+    TableStateStore,
+)
 
 
 def _msg(block_num, changes):
@@ -135,7 +138,7 @@ def test_epoch_replay_is_idempotent(spark, tmp_path, block_meta_catalog, changes
 
 
 def test_cursor_store_roundtrip_and_mismatch(spark, tmp_path):
-    store = CursorStore(spark, str(tmp_path / "cursors"))
+    store = CursorStore(TableStateStore(spark, str(tmp_path / "wh"), Catalog()))
     assert store.get_cursor("h1") is None
     store.write_cursor(Cursor("h1", "c1", 10, "0xa"))
     store.write_cursor(Cursor("h2", "c2", 20, "0xb"))
