@@ -428,18 +428,25 @@ def apply_table_ops_delta(
       ``target_with_src`` (the epoch that wrote each current row), so
       a reader subtracts exactly the right physical rows.
 
-    Join shape: the window's ops are the SMALL side — one broadcast
-    hash join probes the bucket state once; no target shuffle, no
-    full-outer reconcile.  Write volume is O(changed rows), the whole
-    point of deletion vectors (SCALE.md "Known trade-offs").
+    Join shape: the bucket state streams through an INNER hash join
+    whose build side is the broadcast window (``F.broadcast(ops)``),
+    so only the window's ops cross the driver and the state is
+    scanned once, in place — no target broadcast, no shuffle, no
+    full-outer reconcile.  The join yields the ops whose pk has a
+    current row: their old rows are the mask and the UPDATEs among
+    them are merged into delta rows.  CREATE rows are built straight
+    from the ops (an upsert needs no current row).  Write volume is
+    O(changed rows), the whole point of deletion vectors (SCALE.md
+    "Known trade-offs").
 
     Semantics identical to :func:`apply_table_ops`:
     UPDATE on a missing pk matches nothing; CREATE replaces an
-    existing row (upsert); DELETE removes.  With ``cache=True`` the
-    shared ops⋈target join (ops-sized, tiny) is cached so the two
-    output writes scan the bucket ONCE; the third return value is the
-    cached DataFrame for the caller to unpersist after commit (None
-    when ``cache=False``)."""
+    existing row (upsert); DELETE removes; an errored group (see
+    :func:`guard_merge_errors`) raises while the broadcast side is
+    built.  With ``cache=True`` the ops⋈target match (ops-sized,
+    tiny) is cached so the two output writes scan the bucket ONCE; the
+    third return value is the cached DataFrame for the caller to
+    unpersist after commit (None when ``cache=False``)."""
     pk = info.primary_key
     # Spark string literals honor backslash escapes by default, so a
     # backslash in a name must double too (else 'a\b' parses as an
@@ -447,37 +454,33 @@ def apply_table_ops_delta(
     esc = lambda s: s.replace("\\", "\\\\").replace("'", "''")  # noqa: E731
     bq = lambda s: "`" + s.replace("`", "``") + "`"  # noqa: E731
     ops_t = ops.selectExpr("pk AS __pk", "op AS __op", "fields AS __fields")
-    joined = F.broadcast(ops_t).join(
-        target_with_src.alias("t"),
-        F.expr(f"CAST(t.{bq(pk)} AS STRING) = __pk"),
-        "left",
+    matched = target_with_src.alias("t").join(
+        F.broadcast(ops_t), F.expr(f"CAST(t.{bq(pk)} AS STRING) = __pk"), "inner"
     )
     # flatten t.* now: a cached plan keyed on the alias would lose the
     # qualifier for downstream resolvers
-    joined = joined.selectExpr(
+    matched = matched.selectExpr(
         "__pk", "__op", "__fields",
         *[f"t.{bq(f.name)} AS {bq('__t_' + f.name)}" for f in info.schema.fields],
         "t.__src AS __t_src",
     )
     cached = None
     if cache:
-        joined = cached = joined.cache()
-    exists = f"{bq('__t_' + pk)} IS NOT NULL"
-    delta_rows = joined.where(
-        f"__op = 'CREATE' OR (__op = 'UPDATE' AND {exists})"
-    )
-    out_cols = []
+        matched = cached = matched.cache()
+    created_cols, updated_cols = [], []
     for field in info.schema.fields:
         new_val = coerce_sql(f"__fields['{esc(field.name)}']", field.dataType)
-        out_cols.append(
-            f"CASE WHEN __op = 'CREATE' THEN {new_val} "
-            f"WHEN map_contains_key(__fields, '{esc(field.name)}') THEN {new_val} "
+        created_cols.append(f"{new_val} AS {bq(field.name)}")
+        updated_cols.append(
+            f"CASE WHEN map_contains_key(__fields, '{esc(field.name)}') THEN {new_val} "
             f"ELSE {bq('__t_' + field.name)} END AS {bq(field.name)}"
         )
-    delta = delta_rows.selectExpr(*out_cols)
-    mask = joined.where(
-        f"{exists} AND __op IN ('CREATE', 'UPDATE', 'DELETE')"
-    ).selectExpr("__t_src AS src", "__pk AS pk")
+    created = ops_t.where("__op = 'CREATE'").selectExpr(*created_cols)
+    updated = matched.where("__op = 'UPDATE'").selectExpr(*updated_cols)
+    delta = created.unionByName(updated)
+    mask = matched.where("__op IN ('CREATE', 'UPDATE', 'DELETE')").selectExpr(
+        "__t_src AS src", "__pk AS pk"
+    )
     return delta, mask, cached
 
 

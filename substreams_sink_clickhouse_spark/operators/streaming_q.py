@@ -434,9 +434,9 @@ def _dv_replay_fixture(spark: SparkSession, sf: str):
     * epoch 2: UPDATE price += 50, status = 'X' for orderkey % 5 == 0
       (block 2) and DELETE orderkey % 11 == 0 (block 3) — an
       update/delete-heavy window, committed as sidecars: one small
-      delta parquet + one (src, pk) deletion-vector parquet per
-      touched bucket (streaming/pipeline.py commit_epoch
-      sidecar_states)
+      delta parquet + one (src, pk) deletion-vector parquet for the
+      table, shared by the touched buckets (streaming/pipeline.py
+      commit_epoch sidecar_states)
     * epoch 3: UPDATE status = 'Y' for surviving orderkey % 7 == 0
       (block 4) — the second status wave q182's SCD2 intervals hinge
       on.

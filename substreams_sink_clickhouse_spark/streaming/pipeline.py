@@ -7,7 +7,10 @@ flush (/root/reference/db/flush.go:12-69) has no parquet analog, so
 effectively-once is achieved the way Spark sinks do it:
 
 * every micro-batch (epoch) writes each affected table's NEW state to
-  a fresh versioned directory ``<warehouse>/<table>/v<epoch>``;
+  a fresh versioned directory ``<warehouse>/<table>/v<epoch>`` — the
+  touched buckets' full state in one ``__b=<k>`` directory each, or,
+  for a deletion-vector (sidecar) epoch, one delta file plus one
+  ``dv<epoch>`` deletion-vector file shared by every touched bucket;
 * a tiny JSON manifest is then swapped atomically (``os.replace``) to
   point readers at the new versions and record the applied epoch, its
   head block and the module's cursor row — the epoch's one commit
@@ -23,6 +26,9 @@ read, edit and swap under one ``flock`` on ``<warehouse>/manifest.lock``.
 Commits stage their bucket files first and apply their entries onto the
 manifest as re-read under the lock; one whose table changed since it
 was planned raises ``ManifestConflictError`` rather than overwrite.
+Commits hold ``<warehouse>/write.lock`` shared from their first write
+through their swap and ``vacuum`` holds it exclusive, so a vacuum never
+deletes a directory that a commit is still writing or has yet to swap in.
 
 Flush cadence (O9): the reference flushes every 1000 blocks during
 catch-up and every block when live (sinker/sinker.go:19-22,180-194).
@@ -40,8 +46,10 @@ Delta/Iceberg formalize; we keep it explicit and dependency-free.
 from __future__ import annotations
 
 import fcntl
+import functools
 import json
 import os
+import shutil
 import tempfile
 import time
 import uuid
@@ -50,6 +58,7 @@ from typing import Callable, NamedTuple
 
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from substreams_sink_clickhouse_spark.catalog import Catalog
 from substreams_sink_clickhouse_spark.functions.localdata import empty_df
@@ -81,6 +90,16 @@ MAX_SIDECAR_LAYERS = 4
 #: sort-merge reconcile anyway).
 MAX_SIDECAR_WINDOW_OPS = 2_000_000
 
+#: A sidecar commit writes its delta rows and its deletion vector as
+#: ONE file each for the whole table (not one directory per bucket),
+#: with no shuffle, from at most one task per this many window ops
+#: (``coalesce`` never adds tasks).  Writing a file costs per
+#: directory, not per row: 1000 rows into 16 ``__b=`` directories
+#: measured 0.6-0.9 s from 1 task or from 16, the same rows as one
+#: file 0.21-0.24 s.  The value itself is not measured: the windows
+#: measured so far hold ~1k ops.
+SIDECAR_WRITE_BLOCK_OPS = 100_000
+
 #: Accumulated deletion-vector byte budget per bucket.  The layer cap
 #: (MAX_SIDECAR_LAYERS) bounds DATA-layer growth, but pure-delete
 #: epochs grow only the dv — no new layer — so without this cap the dv
@@ -103,17 +122,68 @@ MAX_DV_BYTES_PER_BUCKET = 32 * 1024 * 1024
 MAX_DV_BYTES_BROADCAST_TOTAL = 256 * 1024 * 1024
 
 
+#: Schema of a deletion-vector file: the epoch tag of the layer
+#: holding a superseded row, and that row's pk.
+_DV_SCHEMA = T.StructType(
+    [T.StructField("src", T.LongType()), T.StructField("pk", T.StringType())]
+)
+
+#: The deletion-vector fields of a layered bucket entry.
+_DV_KEYS = ("dv", "dv_shared", "masked")
+
+
+def _union(dfs) -> DataFrame:
+    """Union by name of one or more DataFrames."""
+    return functools.reduce(DataFrame.unionByName, dfs)
+
+
+def _parquet_files(path: str | None) -> list[str]:
+    """The .parquet files directly under ``path`` ([] for
+    missing/None)."""
+    if not path or not os.path.isdir(path):
+        return []
+    return [os.path.join(path, f) for f in sorted(os.listdir(path)) if f.endswith(".parquet")]
+
+
 def _parquet_dir_bytes(path: str | None) -> int:
     """Total bytes of the .parquet files directly under ``path`` (0 for
     missing/None).  Driver-side manifest bookkeeping — file sizes only,
     no footer reads."""
-    if not path or not os.path.isdir(path):
+    return sum(os.path.getsize(f) for f in _parquet_files(path))
+
+
+def _dir_stats(path: str | None, memo: dict) -> tuple[int, int, int]:
+    """(files, rows, bytes) of the .parquet files directly under
+    ``path``, rows from the footers (driver-side metadata, no Spark
+    job); read once per path and kept in ``memo``."""
+    import pyarrow.parquet as pq
+
+    if path not in memo:
+        files = _parquet_files(path)
+        memo[path] = (
+            len(files),
+            sum(pq.ParquetFile(f).metadata.num_rows for f in files),
+            sum(os.path.getsize(f) for f in files),
+        )
+    return memo[path]
+
+
+def _share(n_bytes: int, rows: int, total: int) -> int:
+    """A bucket's bytes of a shared file: in proportion to its rows."""
+    return -(-n_bytes * rows // total) if total else 0
+
+
+def _bucket_dv_bytes(val, memo: dict) -> int:
+    """Deletion-vector bytes charged to one bucket entry: its own dv
+    directory, or its row share of a shared epoch dv file (footers
+    read once per file through ``memo``)."""
+    dv = TableStateStore._entry_dv(val)
+    if not dv:
         return 0
-    return sum(
-        os.path.getsize(os.path.join(path, f))
-        for f in os.listdir(path)
-        if f.endswith(".parquet")
-    )
+    if val.get("dv_shared"):
+        _, total, n_bytes = _dir_stats(dv, memo)
+        return _share(n_bytes, val["masked"], total)
+    return _parquet_dir_bytes(dv)
 
 
 def _observed_rows(obs) -> int:
@@ -178,10 +248,16 @@ class TableStateStore:
 
     Round 5 adds DELETION-VECTOR commits (Delta/Iceberg
     merge-on-read, dependency-free): a bucket value may be a layered
-    entry — base + per-epoch delta files plus one ``(src, pk)``
-    deletion-vector parquet — so an update/delete-heavy epoch writes
+    entry — base + per-epoch delta layers plus one ``(src, pk)``
+    deletion vector — so an update/delete-heavy epoch writes
     O(changed rows) instead of rewriting whole buckets (measured 31×
-    byte reduction, tools/bench_dv.py).  See ``_entry_layers`` /
+    byte reduction, tools/bench_dv.py).  A sidecar epoch writes ONE
+    delta file (``v<epoch>``) and ONE dv file (``dv<epoch>``) per
+    table, rows sorted by an INT ``__b`` bucket column; the touched
+    buckets' layers and dvs point at those shared directories (marked
+    ``shared``), and a reader filters each shared file to the buckets
+    that point at it.  Rewrite and maintenance commits keep one
+    directory per bucket.  See ``_entry_layers`` /
     ``_read_bmap_subset`` / ``commit_epoch(sidecar_states=...)``.
     """
 
@@ -247,6 +323,17 @@ class TableStateStore:
             return json.load(fh)
 
     @contextmanager
+    def _write_lock(self, exclusive: bool = False):
+        """``flock`` on ``<warehouse>/write.lock``: commits hold it
+        shared from their first file write through their swap, so they
+        run side by side, and ``vacuum`` holds it exclusive, so it
+        never deletes a directory a commit is writing or has yet to
+        swap in."""
+        with open(os.path.join(self.warehouse_dir, "write.lock"), "a") as lock:
+            fcntl.flock(lock, fcntl.LOCK_EX if exclusive else fcntl.LOCK_SH)
+            yield
+
+    @contextmanager
     def edit_manifest(self):
         """The one manifest writer: yields the manifest, read under an
         exclusive ``flock`` on ``<warehouse>/manifest.lock``, for the
@@ -279,51 +366,56 @@ class TableStateStore:
         mask: DataFrame | None = None,
         sort=None,
         new_n_buckets: int | None = None,
+        window_ops: int = 0,
     ) -> _Staged:
         """Write one table's new bucket files under ``<table>/<tag>``
         on top of its ``prior`` manifest entry, and return the staged
         entry for ``_commit_staged``.  Every epoch and maintenance
         commit goes through here.  ``rows`` replace the affected
-        buckets' state, or, with ``mask``, are appended to them as a
-        sidecar layer while the masked (src, pk) rows join each
-        bucket's deletion vector.  With ``new_n_buckets`` the bucket
-        map is rebuilt under that modulus."""
+        buckets' state, one directory per bucket, or, with ``mask``,
+        are appended to them as a sidecar layer while the masked
+        (src, pk) rows join each bucket's deletion vector: one shared
+        delta file and one shared dv file for the table, written from
+        at most one task per ``SIDECAR_WRITE_BLOCK_OPS`` of the
+        window's ``window_ops``.  With ``new_n_buckets`` the bucket map is
+        rebuilt under that modulus."""
         n_b = new_n_buckets or self._entry_n_buckets(prior)
         bmap = dict(prior["buckets"]) if prior and not new_n_buckets else {}
         vdir = os.path.join(self.warehouse_dir, name, tag)
         key = self.catalog.get(name).primary_key
-        written = self._write_buckets(rows, vdir, key, n_b, len(affected), sort)
-        paths = [os.path.join(vdir, f"__b={b}") for b in written]
-        if mask is not None:
-            # deletion vectors: new masks ∪ the affected buckets'
-            # existing dv rows (ONE current dv per bucket)
-            old_dv_paths = [p for b in affected if (p := self._entry_dv(bmap.get(str(b))))]
-            if old_dv_paths:
-                mask = mask.unionByName(
-                    self.spark.read.schema("src LONG, pk STRING").parquet(*old_dv_paths)
-                )
-            dvdir = os.path.join(self.warehouse_dir, name, f"dv{epoch}")
-            dv_written = self._write_buckets(mask, dvdir, "pk", n_b, len(affected))
-            paths += [os.path.join(dvdir, f"__b={b}") for b in dv_written]
+        if mask is None:
+            written = self._write_buckets(rows, vdir, key, n_b, len(affected), sort)
+            for b in affected:
+                # a bucket whose rows were all deleted writes no dir
+                bmap[str(b)] = os.path.join(vdir, f"__b={b}") if b in written else None
+            return _Staged(name, prior, epoch, bmap, n_b, [vdir])
+        n_tasks = max(1, -(-window_ops // SIDECAR_WRITE_BLOCK_OPS))
+        written = self._write_buckets(rows, vdir, key, n_b, n_tasks, shared=True)
+        # deletion vectors: new masks ∪ the affected buckets' existing
+        # dv rows (ONE current dv per bucket)
+        mask = _union([mask, *self._scans(_DV_SCHEMA, self._dv_refs(bmap, affected))])
+        dvdir = os.path.join(self.warehouse_dir, name, f"dv{epoch}")
+        dv_written = self._write_buckets(mask, dvdir, "pk", n_b, n_tasks, shared=True)
         for b in affected:
-            # a bucket whose rows were all deleted writes no dir
-            val = os.path.join(vdir, f"__b={b}") if b in written else None
-            if mask is not None:
-                # sidecar: append the delta layer, swap the dv
-                old = bmap.get(str(b))
-                layers = self._entry_layers(old) + ([{"epoch": epoch, "path": val}] if val else [])
-                dv = os.path.join(dvdir, f"__b={b}") if b in dv_written else self._entry_dv(old)
-                val = {"files": layers, "dv": dv} if layers or dv else None
-            bmap[str(b)] = val
-        return _Staged(name, prior, epoch, bmap, n_b, paths)
+            old = bmap.get(str(b))
+            layers = self._entry_layers(old)
+            if b in written:
+                layers.append({"epoch": epoch, "path": vdir, "shared": True, "rows": written[b]})
+            if b in dv_written:
+                dv = {"dv": dvdir, "dv_shared": True, "masked": dv_written[b]}
+            else:
+                dv = {k: old[k] for k in _DV_KEYS if k in old} if self._entry_dv(old) else {}
+            bmap[str(b)] = {"files": layers, "dv": None, **dv} if layers or dv else None
+        return _Staged(name, prior, epoch, bmap, n_b, [vdir, dvdir])
 
     def _commit_staged(self, manifest: dict, staged: _Staged) -> None:
         """Apply a staged table entry onto ``manifest``, as read inside
         ``edit_manifest``.  If the table's entry is no longer the one
         the commit was planned from (another commit, maintenance or
         rollback swapped in between), or a directory it wrote is gone
-        (a vacuum ran in between), raise ``ManifestConflictError``:
-        applying it would drop that edit or point at missing files."""
+        (deleted by a process outside ``_write_lock``), raise
+        ``ManifestConflictError``: applying it would drop that edit or
+        point at missing files."""
         current = manifest["tables"].get(staged.name)
         if _entry_state(current) != _entry_state(staged.base):
             raise ManifestConflictError(
@@ -335,30 +427,71 @@ class TableStateStore:
         if missing:
             raise ManifestConflictError(
                 f"files staged for table {staged.name!r} were removed before the "
-                f"commit (a vacuum in between?): {missing[:3]}; nothing was committed"
+                f"commit: {missing[:3]}; nothing was committed"
             )
         manifest["tables"][staged.name] = self._table_entry(
             staged.epoch, staged.buckets, staged.n_buckets, prior=current
         )
 
     def _write_buckets(
-        self, df: DataFrame, vdir: str, key_col: str, n_b: int, n_parts: int, sort=None
-    ) -> set[int]:
-        """Hash ``df`` into ``n_b`` buckets on ``key_col``, write one
-        ``vdir/__b=<id>`` directory per non-empty bucket from
-        ``max(2, n_parts)`` tasks, and return the bucket ids written.
-        Pre-sorting by ``(__b, sort)`` satisfies the file writer's
-        required ordering, so no extra sort is inserted and rows land
-        ``sort``-clustered inside each bucket file."""
-        out = df.withColumn("__b", self.bucket_expr(key_col, n_b)).repartition(
-            max(2, n_parts), F.col("__b")
-        )
-        if sort is not None:
-            out = out.sortWithinPartitions("__b", sort)
-        out.write.mode("overwrite").partitionBy("__b").parquet(vdir)
+        self,
+        df: DataFrame,
+        vdir: str,
+        key_col: str,
+        n_b: int,
+        n_parts: int,
+        sort=None,
+        shared: bool = False,
+    ) -> dict[int, int | None]:
+        """Hash ``df`` into ``n_b`` buckets on ``key_col``, write it
+        under ``vdir`` and return ``{bucket id: rows}`` for every
+        bucket that got rows.
+
+        By default each bucket gets its own ``vdir/__b=<id>``
+        directory, written from ``max(2, n_parts)`` tasks (rows are
+        not counted: None).  Pre-sorting by ``(__b, sort)`` satisfies
+        the file writer's required ordering, so no extra sort is
+        inserted and rows land ``sort``-clustered inside each bucket
+        file.
+
+        ``shared=True`` writes one file from each of ``n_parts`` tasks
+        with no shuffle (``coalesce``), rows sorted by ``__b``, which
+        stays in the file as an INT column so row-group statistics
+        prune by bucket.  The per-bucket row counts come from the
+        written files' ``__b`` column, read on the driver.
+
+        A write with no rows still leaves ``vdir`` (vacuum reclaims
+        it); a ``vdir`` missing after the write was deleted by someone
+        else, and raises ``ManifestConflictError`` rather than read as
+        a write with no rows."""
+        out = df.withColumn("__b", self.bucket_expr(key_col, n_b).cast("int"))
+        if shared:
+            out.coalesce(n_parts).sortWithinPartitions("__b").write.mode("overwrite").parquet(vdir)
+        else:
+            out = out.repartition(max(2, n_parts), F.col("__b"))
+            if sort is not None:
+                out = out.sortWithinPartitions("__b", sort)
+            out.write.mode("overwrite").partitionBy("__b").parquet(vdir)
         if not os.path.isdir(vdir):
-            return set()
-        return {int(d.split("=", 1)[1]) for d in os.listdir(vdir) if d.startswith("__b=")}
+            raise ManifestConflictError(
+                f"{vdir} was removed right after it was written; nothing was committed"
+            )
+        if shared:
+            return self._bucket_rows(vdir)
+        return {int(d.split("=", 1)[1]): None for d in os.listdir(vdir) if d.startswith("__b=")}
+
+    @staticmethod
+    def _bucket_rows(vdir: str) -> dict[int, int]:
+        """Rows per bucket in a shared epoch directory, from its files'
+        ``__b`` column."""
+        import pyarrow.compute as pc
+        import pyarrow.parquet as pq
+
+        rows: dict[int, int] = {}
+        for f in _parquet_files(vdir):
+            for vc in pc.value_counts(pq.read_table(f, columns=["__b"]).column("__b")).to_pylist():
+                rows[vc["values"]] = rows.get(vc["values"], 0) + vc["counts"]
+        return rows
 
     @staticmethod
     def _table_entry(
@@ -390,16 +523,25 @@ class TableStateStore:
     #
     # A manifest bucket value is either
     #   * a PATH string — one current data dir, no sidecars (what a
-    #     full-rewrite commit writes; the only form before round 5), or
-    #   * a dict {"files": [{"epoch": e, "path": p}, ...],
-    #             "dv": path-or-None, "masked": int}
-    #     — merge-on-READ layers: base + per-epoch delta files plus ONE
-    #     current deletion-vector parquet of (src, pk) rows naming the
-    #     superseded physical rows (src = the epoch tag of the file
-    #     holding the dead row; legacy base files are tagged -1).
+    #     full-rewrite or maintenance commit writes; the only form
+    #     before round 5), or
+    #   * a dict {"files": [{"epoch": e, "path": p}, ...], "dv": p-or-None}
+    #     — merge-on-READ layers: base + per-epoch delta layers plus ONE
+    #     current deletion vector of (src, pk) rows naming the
+    #     superseded physical rows (src = the epoch tag of the layer
+    #     holding the dead row; base layers are tagged -1).
     #     A reader subtracts the dv with an anti-join; OPTIMIZE (or the
     #     next full-rewrite commit) compacts the entry back to a plain
     #     path.
+    #
+    # A sidecar epoch's layer is ``{"epoch", "path": <table>/v<e>,
+    # "shared": true, "rows": n}``: ``path`` is the epoch's one delta
+    # directory, shared by every bucket it touched, ``rows`` this
+    # bucket's rows in it.  Its dv is ``"dv": <table>/dv<e>,
+    # "dv_shared": true, "masked": n`` — this bucket's n rows of the
+    # shared dv file.  Layers and dvs without ``shared`` are one
+    # bucket's own ``__b=<k>`` directory (rewrites, maintenance, and
+    # sidecar epochs of older engines), read whole.
 
     @staticmethod
     def _entry_layers(val) -> list[dict]:
@@ -414,43 +556,68 @@ class TableStateStore:
     def _entry_dv(val) -> str | None:
         return val.get("dv") if isinstance(val, dict) else None
 
+    @classmethod
+    def _dv_refs(cls, bmap: dict, buckets) -> list[tuple[int, str, bool]]:
+        """(bucket, dv path, shared) of the given buckets that carry a
+        deletion vector."""
+        return [
+            (int(b), dv, bool(bmap[str(b)].get("dv_shared")))
+            for b in buckets
+            if (dv := cls._entry_dv(bmap.get(str(b))))
+        ]
+
+    def _scans(self, schema: T.StructType, refs: list[tuple[int, str, bool]]) -> list[DataFrame]:
+        """Scans of (bucket, path, shared) references: the per-bucket
+        directories in one multi-path read, each shared epoch
+        directory read once and filtered to the buckets that point at
+        it."""
+        own = sorted({p for _, p, shared in refs if not shared})
+        by_path: dict[str, set[int]] = {}
+        for b, p, shared in refs:
+            if shared:
+                by_path.setdefault(p, set()).add(b)
+        out = [self.spark.read.schema(schema).parquet(*own)] if own else []
+        with_b = T.StructType(schema.fields + [T.StructField("__b", T.IntegerType())])
+        for p, buckets in sorted(by_path.items()):
+            out.append(
+                self.spark.read.schema(with_b)
+                .parquet(p)
+                .where(F.col("__b").isin(sorted(buckets)))
+                .drop("__b")
+            )
+        return out
+
     def _read_bmap_subset(
         self, info, bmap: dict, keys: list[str], with_src: bool = False
     ) -> DataFrame:
         """Visible rows of the given bucket entries: union the data
-        layers (grouped by epoch tag — one parquet read per layer
-        generation, each a parallel multi-path scan), then anti-join
-        away deletion-vector rows on (src, pk).  ``with_src`` keeps the
-        ``__src`` epoch-tag column (the sidecar apply path needs it to
-        name the superseded physical rows)."""
-        entries = [bmap.get(k) for k in keys]
-        dv_paths = [p for e in entries if (p := self._entry_dv(e))]
-        by_epoch: dict[int, list[str]] = {}
-        for e in entries:
-            for layer in self._entry_layers(e):
-                by_epoch.setdefault(int(layer["epoch"]), []).append(layer["path"])
+        layers (one scan per layer generation, see ``_scans``), then
+        anti-join away deletion-vector rows on (src, pk).  ``with_src``
+        keeps the ``__src`` epoch-tag column (the sidecar apply path
+        needs it to name the superseded physical rows)."""
+        by_epoch: dict[int, list[tuple[int, str, bool]]] = {}
+        for k in keys:
+            for layer in self._entry_layers(bmap.get(k)):
+                by_epoch.setdefault(int(layer["epoch"]), []).append(
+                    (int(k), layer["path"], bool(layer.get("shared")))
+                )
+        dv_refs = self._dv_refs(bmap, keys)
         if not by_epoch:
             df = empty_df(self.spark, info.schema)
             return df.selectExpr("*", "CAST(NULL AS LONG) AS __src") if with_src else df
-        if not dv_paths and not with_src:
-            # fast path — identical to the pre-deletion-vector reader:
-            # one multi-path scan, no tagging, no join
-            all_paths = [p for ps in by_epoch.values() for p in ps]
-            return self.spark.read.schema(info.schema).parquet(*all_paths)
-        parts = [
-            self.spark.read.schema(info.schema)
-            .parquet(*paths)
-            .selectExpr("*", f"CAST({epoch} AS LONG) AS __src")
-            for epoch, paths in sorted(by_epoch.items())
-        ]
-        df = parts[0]
-        for p in parts[1:]:
-            df = df.unionByName(p)
-        if dv_paths:
-            dv = (
-                self.spark.read.schema("src LONG, pk STRING")
-                .parquet(*dv_paths)
-                .selectExpr("src AS __dv_src", "pk AS __dv_pk")
+        if not dv_refs and not with_src:
+            # fast path — no tagging, no join: every per-bucket
+            # directory in one multi-path scan (the pre-deletion-vector
+            # reader), plus one scan per shared epoch file
+            return _union(self._scans(info.schema, [r for rs in by_epoch.values() for r in rs]))
+        df = _union(
+            scan.selectExpr("*", f"CAST({epoch} AS LONG) AS __src")
+            for epoch, refs in sorted(by_epoch.items())
+            for scan in self._scans(info.schema, refs)
+        )
+        if dv_refs:
+            dv = _union(self._scans(_DV_SCHEMA, dv_refs)).selectExpr(
+                "src AS __dv_src", "pk AS __dv_pk"
             )
             # broadcast only within budget: an oversized TOTAL dv
             # (across all probed buckets) takes a shuffle anti-join
@@ -459,7 +626,7 @@ class TableStateStore:
             # many-bucket read of healthy buckets must keep its
             # broadcast (round-6 advisory).
             if (
-                sum(_parquet_dir_bytes(p) for p in dv_paths)
+                sum(_parquet_dir_bytes(p) for p in {p for _, p, _ in dv_refs})
                 <= MAX_DV_BYTES_BROADCAST_TOTAL
             ):
                 dv = F.broadcast(dv)
@@ -536,7 +703,7 @@ class TableStateStore:
         epoch_id: int,
         new_states: dict[str, tuple[DataFrame, list[int]]],
         cursor: Cursor | None,
-        sidecar_states: dict[str, tuple[DataFrame, DataFrame, list[int]]] | None = None,
+        sidecar_states: dict[str, tuple[DataFrame, DataFrame, list[int], int]] | None = None,
         base: dict | None = None,
     ) -> None:
         """Write each affected bucket's new state, then commit the
@@ -544,11 +711,13 @@ class TableStateStore:
         mark, its head block and the cursor row.  ``new_states`` maps
         table -> (bucket-subset state DF, affected bucket ids) — the
         full-rewrite path.  ``sidecar_states`` maps table -> (delta
-        rows DF, (src, pk) mask DF, affected bucket ids) — the
-        deletion-vector path: per affected bucket this appends ONE
-        small delta file and replaces the bucket's deletion vector with
-        (old dv rows ∪ new masks), so bytes written are O(changed
-        rows), not O(bucket) (see _read_bmap_subset for the read side).
+        rows DF, (src, pk) mask DF, affected bucket ids, window op
+        count) — the deletion-vector path: the table gets ONE delta
+        file, which adds a layer to each affected bucket that got
+        rows, and ONE dv file, which replaces each affected bucket's
+        deletion vector with (old dv rows ∪ new masks), so bytes
+        written are O(changed rows), not O(bucket) (see
+        _read_bmap_subset for the read side).
         Untouched buckets are carried forward by reference, never
         rewritten.  ``base`` is the manifest table map the epoch was
         planned from (default: read now); the swap raises
@@ -556,34 +725,43 @@ class TableStateStore:
         if base is None:
             base = self.read_manifest()["tables"]
         tag = f"v{epoch_id}"
-        staged = [
-            self._stage_table(base.get(name), name, delta, affected, epoch_id, tag, mask=mask)
-            for name, (delta, mask, affected) in (sidecar_states or {}).items()
-        ] + [
-            self._stage_table(base.get(name), name, df, affected, epoch_id, tag)
-            for name, (df, affected) in new_states.items()
-        ]
-        with self.edit_manifest() as manifest:
-            for s in staged:
-                self._commit_staged(manifest, s)
-            manifest["applied_epochs"] = sorted(set(manifest["applied_epochs"]) | {epoch_id})
-            if cursor is not None:
-                manifest.setdefault("epoch_blocks", {})[str(epoch_id)] = cursor.block_num
-                manifest.setdefault("epoch_block_ids", {})[str(epoch_id)] = cursor.block_id
-                manifest["cursors"][cursor.id] = cursor.row()
+        with self._write_lock():
+            staged = [
+                self._stage_table(
+                    base.get(name), name, delta, affected, epoch_id, tag, mask=mask,
+                    window_ops=n_ops,
+                )
+                for name, (delta, mask, affected, n_ops) in (sidecar_states or {}).items()
+            ] + [
+                self._stage_table(base.get(name), name, df, affected, epoch_id, tag)
+                for name, (df, affected) in new_states.items()
+            ]
+            with self.edit_manifest() as manifest:
+                for s in staged:
+                    self._commit_staged(manifest, s)
+                manifest["applied_epochs"] = sorted(set(manifest["applied_epochs"]) | {epoch_id})
+                if cursor is not None:
+                    manifest.setdefault("epoch_blocks", {})[str(epoch_id)] = cursor.block_num
+                    manifest.setdefault("epoch_block_ids", {})[str(epoch_id)] = cursor.block_id
+                    manifest["cursors"][cursor.id] = cursor.row()
 
     def vacuum(self, keep_epochs: int = 2) -> list[str]:
-        """Garbage-collect unreferenced bucket versions (the
+        """Garbage-collect unreferenced table versions (the
         operational cost of versioned merge-on-write — what Delta
         calls VACUUM).
 
-        Keeps every bucket directory referenced by the live bucket map
-        or by the newest ``keep_epochs`` history snapshots (the
-        reorg-rollback window); deletes the rest and returns the
-        deleted paths.  Retention bounds storage regardless of how
-        many epochs have run."""
-        import shutil
-
+        Keeps every directory referenced by the live bucket map or by
+        the newest ``keep_epochs`` history snapshots (the
+        reorg-rollback window): a bucket's own ``__b=<k>`` directory,
+        or a whole shared sidecar epoch directory.  Every other
+        version directory under a table — epoch (``v``/``dv``) and
+        maintenance (``opt``/``ttl``/``upd``/``rbk``) alike — is
+        deleted, or, while some of its bucket directories are still
+        referenced, the rest of them.  Waits for the commits in flight
+        to swap, and holds new ones off until it is done (see
+        ``_write_lock``).  Returns the deleted paths.
+        Retention bounds storage regardless of how many epochs have
+        run."""
         deleted: list[str] = []
 
         def _bmap_paths(bmap: dict) -> set[str]:
@@ -596,9 +774,13 @@ class TableStateStore:
                     refs.add(dv)
             return refs
 
-        # under the lock, so no commit can swap in a reference to a
-        # directory this pass deletes (``_commit_staged`` checks)
-        with self.edit_manifest() as manifest:
+        def _drop(path: str) -> None:
+            shutil.rmtree(path, ignore_errors=True)
+            deleted.append(path)
+
+        # with no commit writing or swapping meanwhile: no directory
+        # this pass deletes is in flight or about to be referenced
+        with self._write_lock(exclusive=True), self.edit_manifest() as manifest:
             for name, entry in manifest["tables"].items():
                 history = entry.get("history", [])
                 keep = (
@@ -613,19 +795,15 @@ class TableStateStore:
                 if os.path.isdir(table_dir):
                     for vname in sorted(os.listdir(table_dir)):
                         vdir = os.path.join(table_dir, vname)
-                        # data versions (v*) AND deletion-vector versions (dv*)
-                        if not (
-                            (vname.startswith("v") or vname.startswith("dv"))
-                            and os.path.isdir(vdir)
-                        ):
+                        if not os.path.isdir(vdir) or vdir in referenced:
                             continue
-                        for bname in sorted(os.listdir(vdir)):
-                            bdir = os.path.join(vdir, bname)
-                            if bname.startswith("__b=") and bdir not in referenced:
-                                shutil.rmtree(bdir, ignore_errors=True)
-                                deleted.append(bdir)
-                        if not any(d.startswith("__b=") for d in os.listdir(vdir)):
-                            shutil.rmtree(vdir, ignore_errors=True)
+                        subdirs = [os.path.join(vdir, b) for b in sorted(os.listdir(vdir))]
+                        if not any(d in referenced for d in subdirs):
+                            _drop(vdir)
+                            continue
+                        for bdir in subdirs:
+                            if os.path.basename(bdir).startswith("__b=") and bdir not in referenced:
+                                _drop(bdir)
                 entry["history"] = keep
         return deleted
 
@@ -662,13 +840,14 @@ class TableStateStore:
         # suffix keeps a concurrent mutation that read the same number
         # from overwriting the files of the one that wins the swap
         seq = int(self.read_manifest().get("mutation_seq", 0)) + 1
-        staged = self._stage_table(
-            entry, name, df, affected, entry["epoch"], f"{kind}{seq}-{uuid.uuid4().hex[:8]}",
-            sort=sort, new_n_buckets=new_n_buckets,
-        )
-        with self.edit_manifest() as manifest:
-            self._commit_staged(manifest, staged)
-            manifest["mutation_seq"] = int(manifest.get("mutation_seq", 0)) + 1
+        with self._write_lock():
+            staged = self._stage_table(
+                entry, name, df, affected, entry["epoch"], f"{kind}{seq}-{uuid.uuid4().hex[:8]}",
+                sort=sort, new_n_buckets=new_n_buckets,
+            )
+            with self.edit_manifest() as manifest:
+                self._commit_staged(manifest, staged)
+                manifest["mutation_seq"] = int(manifest.get("mutation_seq", 0)) + 1
 
     def optimize(
         self,
@@ -872,37 +1051,36 @@ class TableStateStore:
         """``system.parts`` parity: per-bucket storage metadata of the
         LIVE table state — file count, bytes, rows — read from parquet
         footers and the filesystem (pure metadata, no Spark job), the
-        same way ClickHouse serves system.parts from part headers."""
-        import pyarrow.parquet as pq
-
+        same way ClickHouse serves system.parts from part headers.  A
+        shared sidecar epoch file counts for each bucket that points
+        at it with that bucket's rows (from the manifest) and their
+        share of its bytes; its files count once, at the lowest bucket
+        that points at it, so ``n_files`` sums to the files on disk."""
         entry = self.read_manifest()["tables"].get(name)
         if entry is None:
             return []
         out: list[dict] = []
-
-        def _dir_stats(path: str) -> tuple[int, int, int]:
-            if not path or not os.path.isdir(path):
-                return 0, 0, 0
-            files = [f for f in os.listdir(path) if f.endswith(".parquet")]
-            n_bytes = n_rows = 0
-            for f in files:
-                fp = os.path.join(path, f)
-                n_bytes += os.path.getsize(fp)
-                n_rows += pq.ParquetFile(fp).metadata.num_rows
-            return len(files), n_bytes, n_rows
+        memo: dict = {}
+        files_at: dict[str, int] = {}  # shared path -> bucket counting its files
 
         for b, val in sorted(entry["buckets"].items(), key=lambda kv: int(kv[0])):
             layers = self._entry_layers(val)
-            if not layers and not self._entry_dv(val):
+            dv_path = self._entry_dv(val)
+            if not layers and not dv_path:
                 continue
             n_files = n_bytes = n_rows = 0
             for layer in layers:
-                nf, nb, nr = _dir_stats(layer["path"])
+                nf, nr, nb = _dir_stats(layer["path"], memo)
+                if layer.get("shared"):
+                    # this bucket's rows of a shared sidecar epoch file
+                    nf = nf if files_at.setdefault(layer["path"], int(b)) == int(b) else 0
+                    nb = _share(nb, layer["rows"], nr)
+                    nr = layer["rows"]
                 n_files += nf
                 n_bytes += nb
                 n_rows += nr
-            dv_path = self._entry_dv(val)
-            _, dv_bytes, dv_rows = _dir_stats(dv_path) if dv_path else (0, 0, 0)
+            dv_shared = dv_path and val.get("dv_shared")
+            dv_rows = val["masked"] if dv_shared else _dir_stats(dv_path, memo)[1]
             out.append(
                 {
                     "table": name,
@@ -913,7 +1091,7 @@ class TableStateStore:
                     "rows": n_rows,  # physical rows incl. dv-masked
                     "n_layers": len(layers),
                     "dv_rows": dv_rows,
-                    "dv_bytes": dv_bytes,
+                    "dv_bytes": _bucket_dv_bytes(val, memo),
                 }
             )
         return out
@@ -956,8 +1134,8 @@ class ChangesIngestPipeline:
         self.stop_block = stop_block
         self.state = TableStateStore(spark, warehouse_dir, catalog, n_buckets=n_buckets)
         #: Epoch write strategy: "auto" commits a window as deletion-
-        #: vector sidecars (one small delta file + dv per touched
-        #: bucket — bytes written O(changed rows)) whenever every
+        #: vector sidecars (one small delta file + one dv file per
+        #: table — bytes written O(changed rows)) whenever every
         #: touched bucket has fewer than MAX_SIDECAR_LAYERS data
         #: layers, falling back to the full bucket rewrite (which also
         #: compacts the layers away).  "rewrite" always rewrites —
@@ -1078,10 +1256,11 @@ class ChangesIngestPipeline:
 
             def sidecar_eligible(name: str, buckets: list[int]) -> bool:
                 """Deletion-vector commit iff the table has committed
-                state, no touched bucket is at the layer cap, and the
-                window is small enough to BROADCAST — the sidecar apply
-                probes the bucket state with the window's ops as the
-                broadcast side (apply_table_ops_delta), so an op count
+                state, no touched bucket is at the layer cap or over
+                its dv byte budget, and the window is small enough to
+                BROADCAST — the sidecar apply streams the bucket state
+                through a hash join whose broadcast build side is the
+                window's ops (apply_table_ops_delta), so an op count
                 past the broadcast budget must take the shuffle-based
                 full-rewrite reconcile instead.  Sidecar writes are
                 O(changed rows) whenever they apply; the layer cap
@@ -1101,11 +1280,9 @@ class ChangesIngestPipeline:
                 # no new data layer, so the layer cap alone never
                 # triggers compaction — an over-budget dv forces this
                 # bucket onto the full-rewrite path, which clears it
+                memo: dict = {}
                 if any(
-                    _parquet_dir_bytes(
-                        TableStateStore._entry_dv(bmap.get(str(b)))
-                    )
-                    > MAX_DV_BYTES_PER_BUCKET
+                    _bucket_dv_bytes(bmap.get(str(b)), memo) > MAX_DV_BYTES_PER_BUCKET
                     for b in buckets
                 ):
                     return False
@@ -1116,7 +1293,7 @@ class ChangesIngestPipeline:
                 )
 
             new_states: dict[str, tuple[DataFrame, list[int]]] = {}
-            sidecar_states: dict[str, tuple[DataFrame, DataFrame, list[int]]] = {}
+            sidecar_states: dict[str, tuple[DataFrame, DataFrame, list[int], int]] = {}
             observations = []
             delta_caches = []
             for name, buckets in affected.items():
@@ -1130,6 +1307,7 @@ class ChangesIngestPipeline:
                         delta.observe(obs, F.count(F.lit(1)).alias("rows")),
                         mask,
                         buckets,
+                        window_ops[name],
                     )
                     if cached is not None:
                         delta_caches.append(cached)

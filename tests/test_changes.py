@@ -230,6 +230,43 @@ def test_varint_rejects_negative():
         _varint(-1)
 
 
+def test_wire_encoder_bytes_are_pinned():
+    """The encoder builds each message with one join instead of
+    growing it per change; its bytes must stay exactly what the
+    per-change concatenation produced: unicode names and values, empty
+    values and a zero ordinal (both omitted on the wire), a change with
+    one field name repeated, the same change twice, no fields at all."""
+    import hashlib
+
+    from substreams_sink_clickhouse_spark.sources.protobuf_wire import (
+        encode_database_changes,
+    )
+
+    class Pairs(list):  # field pairs with a repeated name
+        def items(self):
+            return iter(self)
+
+    repeated = {"table": "t", "pk": "", "ordinal": 300, "op": "UPDATE",
+                "fields": Pairs([("v", "1"), ("v", "2"), ("v", "")])}
+    changes = [
+        {"table": "tökens", "pk": "0xé€", "ordinal": 0, "op": "CREATE",
+         "fields": {"name": "Ünïcødé ✓", "empty": "", "n": "1"}},
+        repeated,
+        repeated,
+        {"table": "", "pk": "k", "ordinal": 2**40, "op": "DELETE", "fields": {}},
+        {"table": "t", "pk": "u", "ordinal": 1, "op": "UNSET"},
+    ]
+    assert encode_database_changes(changes[:1]).hex() == (
+        "0a3e0a0774c3b66b656e7312073078c3a9e282ac20012a170a046e616d65120fc39c6ec3"
+        "af63c3b864c3a920e29c932a070a05656d7074792a060a016e120131"
+    )
+    wire = encode_database_changes(changes)
+    assert len(wire) == 156
+    assert hashlib.sha256(wire).hexdigest() == (
+        "735bee64024783bb84f741ca4c8f48ec26bc9ba4c00375527a80246c5f295745"
+    )
+
+
 def test_protobuf_fallback_refuses_other_message_types(spark):
     """Connector absent: the pure wire parser must only stand in for
     DatabaseChanges — any other message type is an error, not a silent
