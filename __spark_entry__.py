@@ -12,6 +12,7 @@ from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
+from substreams_sink_clickhouse_spark import memo
 from substreams_sink_clickhouse_spark.registry import all_specs
 from substreams_sink_clickhouse_spark.session import tune_session
 
@@ -24,14 +25,6 @@ def entry(spark: SparkSession) -> DataFrame:
 
     tune_session(spark)
     return _q07(spark, _SMOKE_SF_DIR)
-
-
-#: Prepared-plan cache: building a complex DataFrame plan costs
-#: 0.1-0.4s of driver-side work (py4j + Catalyst analysis); a repeated
-#: query on the same session + data dir reuses the analyzed plan, the
-#: way a database reuses a prepared statement.  Keyed by session id so
-#: per-profile child sessions each hold their own plans.
-_PLAN_MEMO: dict[tuple, DataFrame] = {}
 
 
 def _rotation_order(specs: list) -> list:
@@ -67,15 +60,15 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     """One entry per implemented operator from SURVEY.md §2 (ordered
     for driver-sample rotation — see _rotation_order)."""
 
+    # Prepared plans, per session + data dir: building one costs 0.1-0.4 s
+    # of py4j + Catalyst analysis, which a repeated query skips the way
+    # a database reuses a prepared statement.
     def wrap(name, builder):
         def run(spark: SparkSession, sf_dir: str) -> DataFrame:
-            key = (id(spark), sf_dir, name)
-            df = _PLAN_MEMO.get(key)
-            if df is None:
-                tune_session(spark)
-                df = builder(spark, sf_dir)
-                _PLAN_MEMO[key] = df
-            return df
+            return memo.per_session(
+                spark, "registry_plans", (sf_dir, name),
+                lambda: builder(tune_session(spark), sf_dir),
+            )
 
         return run
 

@@ -269,6 +269,7 @@ def bench_ingest(spark, sf_dir: str) -> float:
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     import __spark_entry__ as entry_mod
+    from substreams_sink_clickhouse_spark import memo
     from substreams_sink_clickhouse_spark.registry import all_specs
     from substreams_sink_clickhouse_spark.session import get_spark, interactive_session
 
@@ -347,27 +348,6 @@ def main() -> None:
         except OSError:
             return
 
-    def evict_dedup_cores() -> None:
-        """Timed-region contract (round 12): the dedup shared-core memo
-        (``_CORE_CACHE``) persists CPU-dense intermediates (minhash
-        signatures, shingle rows) once per session+sf so the GATE's
-        many consumers of the same core don't recompute it.  Under the
-        bench, every timed rep must compute the full pipeline from the
-        parquet inputs — previously rep 1 built+persisted the signature
-        frame and reps 2-4 read it, so the best-of excluded the
-        signature build while the paired DuckDB leg recomputed it every
-        rep.  Evicting (and unpersisting) the cache before each rep
-        makes every rep pay the whole pipeline; ``dedup_minhash`` is
-        the only headline entry that reads the cache."""
-        from substreams_sink_clickhouse_spark.operators import dedup
-
-        for key, df in list(dedup._CORE_CACHE.items()):
-            try:
-                df.unpersist()
-            except Exception:
-                pass
-            dedup._CORE_CACHE.pop(key, None)
-
     loadavg_before = loadavg_1m()
     timings: dict[str, float] = {}
     loadavg_at_reps: dict[str, float] = {}
@@ -383,7 +363,10 @@ def main() -> None:
         if la is not None:
             loadavg_at_reps[name] = la
         for _ in range(4):
-            evict_dedup_cores()
+            # every timed rep computes the whole pipeline from the parquet
+            # inputs, as the paired DuckDB leg does: drop the dedup shared
+            # cores, which dedup_minhash would read from the previous rep
+            memo.clear("dedup_cores")
             t0 = time.time()
             fn(sess(name), sf_dir).count()
             best = min(best, time.time() - t0)
@@ -395,7 +378,7 @@ def main() -> None:
         # shuffle-byte jump) the way it already self-adjudicates load
         if ui_port is not None:
             try:
-                evict_dedup_cores()
+                memo.clear("dedup_cores")
                 before = stage_shuffle_read_total(ui_port)
                 fn(sess(name), sf_dir).count()
                 shuffle_bytes[name] = stage_shuffle_read_total(ui_port) - before
@@ -419,7 +402,7 @@ def main() -> None:
     import concurrent.futures
 
     settle()
-    evict_dedup_cores()
+    memo.clear("dedup_cores")
     t0 = time.time()
     with concurrent.futures.ThreadPoolExecutor(max_workers=len(HEADLINE)) as pool:
         futures = [

@@ -26,6 +26,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
+from substreams_sink_clickhouse_spark import memo
+
 #: Above this, literal-projection plans get unwieldy; use Arrow.
 _MAX_LITERAL_ROWS = 128
 
@@ -73,21 +75,11 @@ def local_df(spark: SparkSession, rows: list, schema: StructType) -> DataFrame:
         return spark.createDataFrame(rows, schema)
 
 
-#: (SparkSession id, schema json) -> empty DataFrame.  An empty plan is
-#: immutable and session-bound, so handing back the same Dataset is
-#: safe; building it costs ~25 ms of py4j per call, which repeated
-#: merge replays (bench, property tests) pay hundreds of times.
-_EMPTY_CACHE: dict[tuple[int, str], DataFrame] = {}
-
-
 def empty_df(spark: SparkSession, schema: StructType) -> DataFrame:
     """Empty DataFrame with the schema's names/types (nullable-relaxed),
-    as a zero-row JVM-local plan (memoized per session + schema)."""
-    key = (id(spark), schema.json())
-    df = _EMPTY_CACHE.get(key)
-    if df is None:
-        df = local_df(spark, [], schema)
-        if len(_EMPTY_CACHE) > 256:  # unbounded sessions/schemas guard
-            _EMPTY_CACHE.clear()
-        _EMPTY_CACHE[key] = df
-    return df
+    as a zero-row JVM-local plan, memoized per session + schema: it is
+    immutable, and building it costs ~25 ms of py4j, which merge
+    replays (bench, property tests) would pay hundreds of times."""
+    return memo.per_session(
+        spark, "empty_frames", (schema.json(),), lambda: local_df(spark, [], schema)
+    )

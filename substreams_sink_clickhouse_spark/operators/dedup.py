@@ -51,6 +51,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from substreams_sink_clickhouse_spark import memo
 from substreams_sink_clickhouse_spark.functions.hashing import (
     duck_md5_long_sql,
     md5_long,
@@ -287,33 +288,18 @@ def _minhash_sigs(docs: DataFrame) -> DataFrame:
     )
 
 
-#: (applicationId, sf, core) -> persisted shared intermediate.  A gate
-#: run evaluates several entries that all start from the same CPU-dense
-#: cores (minhash signatures: 8 affine MD5 folds per doc; shingle
-#: common-pair counts: the capped bucket expansion) — materializing
-#: each core ONCE per session+sf and letting every consumer read the
-#: cache is the production pattern of writing signatures/pair counts
-#: to storage once per run instead of recomputing them per query.
-#: Entries only READ the cached frames; correctness is unchanged (the
-#: cache holds exactly the frame the consumer would have built).
-#: Keyed by applicationId (NOT id(spark): object ids are reused after
-#: GC — the round-10 advisory on _DV_REPLAY_CACHE).
-_CORE_CACHE: dict[tuple[str, str, str], DataFrame] = {}
+#: (applicationId, sf, core) -> persisted shared intermediate: the
+#: memo's ``dedup_cores`` namespace, which the benchmark pops so every
+#: timed call rebuilds.  Several gate entries start from the same
+#: CPU-dense cores (minhash signatures: 8 affine MD5 folds per doc;
+#: shingle common-pair counts: the capped bucket expansion), so each
+#: is materialized once per application+sf, the way a production run
+#: writes them to storage once, and every consumer only reads it.
+_CORE_CACHE = memo.namespace("dedup_cores")
 
 
 def _shared_core(spark: SparkSession, sf: str, name: str, build) -> DataFrame:
-    app = spark.sparkContext.applicationId
-    key = (app, sf, name)
-    got = _CORE_CACHE.get(key)
-    if got is None:
-        # evict entries of OTHER applications on insert: a multi-
-        # session process (repeated engine setups, notebook restarts)
-        # must not accumulate persisted frames of stopped contexts
-        for stale in [k for k in _CORE_CACHE if k[0] != app]:
-            del _CORE_CACHE[stale]
-        got = build().persist()
-        _CORE_CACHE[key] = got
-    return got
+    return memo.per_app(spark, "dedup_cores", (sf, name), lambda: build().persist())
 
 
 def _minhash_sigs_cached(spark: SparkSession, sf: str) -> DataFrame:

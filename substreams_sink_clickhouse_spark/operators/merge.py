@@ -488,29 +488,22 @@ def merge_changes(
     changes: DataFrame,
     targets: dict[str, DataFrame],
     catalog: Catalog,
-    check_errors: bool = True,
-    return_reduced: bool = False,
-):
+    check_errors: bool | str = True,
+) -> dict[str, DataFrame]:
     """Full merge: reduce a changes window and apply it to every
     affected table's state.  Returns the new state per table.
 
     ``check_errors`` modes:
 
-    * ``True`` (default) — eager: cache the reduced ops, probe for
-      errors, raise ``MergeSemanticsError`` before anything is applied.
-      The right mode when the caller must not write ANY table on a bad
-      window (the streaming pipeline).
+    * ``True`` (default) — eager: cache the reduced ops (the probe and
+      each table's apply join would otherwise re-execute the whole
+      fold), probe for errors, raise ``MergeSemanticsError`` before
+      anything is applied.  The right mode when the caller must not
+      write ANY table on a bad window.
     * ``"inline"`` — single-pass: no cache, no probe job; errored
       groups raise from inside the apply job itself
       (:func:`guard_merge_errors`).  Halves the work for one-shot
       batch replays over a single table.
-    * ``False`` — skip checking entirely.
-
-    In the eager mode the reduced-ops DataFrame is cached (the probe,
-    each table's apply join, and any downstream action would otherwise
-    re-execute the whole fold); pass ``return_reduced=True`` to also
-    receive the cached DF so a long-running caller (the streaming
-    pipeline) can unpersist it after committing the epoch.
     """
     reduced = reduce_changes(changes, catalog.primary_keys())
     if check_errors == "inline":
@@ -519,16 +512,13 @@ def merge_changes(
             live = live.cache()
     else:
         reduced = reduced.cache()
-        if check_errors:
-            check_merge_errors(reduced)
+        check_merge_errors(reduced)
         live = reduced.filter(F.col("err").isNull())
     out: dict[str, DataFrame] = {}
     for name, target in targets.items():
         info = catalog.get(name)
         ops_t = live.filter(F.col("table") == name)
         out[name] = apply_table_ops(target, ops_t, info)
-    if return_reduced:
-        return out, reduced
     return out
 
 

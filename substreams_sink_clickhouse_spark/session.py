@@ -13,6 +13,7 @@ import os
 
 from pyspark.sql import SparkSession
 
+from substreams_sink_clickhouse_spark import memo
 from substreams_sink_clickhouse_spark.errors import EnvVarError
 
 #: Runtime-settable confs every engine query depends on.
@@ -78,10 +79,6 @@ def interactive_session(spark: SparkSession, shuffle_partitions: int = 8) -> Spa
     return child
 
 
-#: applicationId -> memoized trainer child session (see iterate_session).
-_ITERATE_SESSIONS: dict[str, SparkSession] = {}
-
-
 def iterate_session(spark: SparkSession) -> SparkSession:
     """Child session for the INTERMEDIATE actions of iterative trainers
     (Lloyd seed collect + refinement steps): those plans are fixed
@@ -94,14 +91,7 @@ def iterate_session(spark: SparkSession) -> SparkSession:
     caller's session, so cluster-scale executions of the entry itself
     remain adaptive.  Memoized per application so repeated query
     builds reuse one child instead of accumulating session state."""
-    app = spark.sparkContext.applicationId
-    got = _ITERATE_SESSIONS.get(app)
-    if got is None:
-        for stale in [k for k in _ITERATE_SESSIONS if k != app]:
-            del _ITERATE_SESSIONS[stale]
-        got = interactive_session(spark)
-        _ITERATE_SESSIONS[app] = got
-    return got
+    return memo.per_app(spark, "iterate_session", (), lambda: interactive_session(spark))
 
 
 def _env_positive_int(name: str, default: int) -> int:
@@ -120,10 +110,6 @@ def _env_positive_int(name: str, default: int) -> int:
     return value
 
 
-#: applicationId -> memoized streaming child session (see stream_session).
-_STREAM_SESSIONS: dict[str, SparkSession] = {}
-
-
 def stream_session(spark: SparkSession) -> SparkSession:
     """Child session for micro-batch replays.  Stateful streaming
     disables AQE, so ``spark.sql.shuffle.partitions`` IS the
@@ -140,19 +126,17 @@ def stream_session(spark: SparkSession) -> SparkSession:
     45.3 -> 28.3 s, watermarked agg 18.9 -> 13.8 s — results
     hash-identical at every width (hash partitioning only moves
     state, never changes it).  On a 32-core context the default width
-    is 32, exactly the previous fixed value."""
-    app = spark.sparkContext.applicationId
-    got = _STREAM_SESSIONS.get(app)
-    if got is None:
-        for stale in [k for k in _STREAM_SESSIONS if k != app]:
-            del _STREAM_SESSIONS[stale]
+    is 32, exactly the previous fixed value.  Memoized per application."""
+
+    def build() -> SparkSession:
         width = _env_positive_int(
             "SPARK_GRAFT_STREAM_SHUFFLE", spark.sparkContext.defaultParallelism
         )
-        got = tune_session(spark.newSession())
-        got.conf.set("spark.sql.shuffle.partitions", str(width))
-        _STREAM_SESSIONS[app] = got
-    return got
+        child = tune_session(spark.newSession())
+        child.conf.set("spark.sql.shuffle.partitions", str(width))
+        return child
+
+    return memo.per_app(spark, "stream_session", (), build)
 
 
 def get_spark(

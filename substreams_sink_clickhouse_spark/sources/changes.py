@@ -15,10 +15,11 @@ carried on the wire but never read by the sink
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from substreams_sink_clickhouse_spark import memo
 from substreams_sink_clickhouse_spark.catalog import Catalog
 from substreams_sink_clickhouse_spark.errors import UnknownTableError
 
@@ -153,10 +154,6 @@ def decode_database_changes(
 #: accepted there).
 DATABASE_CHANGES_MESSAGE = "sf.substreams.sink.database.v1.DatabaseChanges"
 
-#: Session -> is the spark-protobuf connector jar loaded?  Probed once.
-_PB_CONNECTOR_STATE: dict[int, bool] = {}
-
-
 def protobuf_connector_available(spark: SparkSession) -> bool:
     """True iff the spark-protobuf connector jar is loaded.
 
@@ -164,24 +161,25 @@ def protobuf_connector_available(spark: SparkSession) -> bool:
     binary descriptor: an absent jar fails analysis with
     ``[PROTOBUF_NOT_LOADED_SQL_FUNCTIONS_UNUSABLE]`` (a loaded jar
     instead complains about the descriptor — which means it's there).
-    Cached per SparkContext so callers can branch on availability
+    Probed once per application so callers can branch on availability
     instead of guessing from arbitrary exceptions.
     """
-    key = id(spark.sparkContext)
-    if key not in _PB_CONNECTOR_STATE:
-        try:
-            from pyspark.sql.protobuf.functions import from_protobuf
+    return memo.per_app(spark, "protobuf_connector", (), lambda: _probe_protobuf_connector(spark))
 
-            probe = spark.range(1).select(F.lit(b"").alias("v"))
-            probe.select(
-                from_protobuf(F.col("v"), "Probe", binaryDescriptorSet=b"")
-            ).schema
-            _PB_CONNECTOR_STATE[key] = True
-        except ImportError:
-            _PB_CONNECTOR_STATE[key] = False
-        except Exception as exc:  # noqa: BLE001 - classify probe outcome
-            _PB_CONNECTOR_STATE[key] = "PROTOBUF_NOT_LOADED" not in str(exc)
-    return _PB_CONNECTOR_STATE[key]
+
+def _probe_protobuf_connector(spark: SparkSession) -> bool:
+    try:
+        from pyspark.sql.protobuf.functions import from_protobuf
+
+        probe = spark.range(1).select(F.lit(b"").alias("v"))
+        probe.select(
+            from_protobuf(F.col("v"), "Probe", binaryDescriptorSet=b"")
+        ).schema
+        return True
+    except ImportError:
+        return False
+    except Exception as exc:  # noqa: BLE001 - classify probe outcome
+        return "PROTOBUF_NOT_LOADED" not in str(exc)
 
 
 def decode_database_changes_protobuf(
@@ -318,9 +316,3 @@ def validate_change_tables(changes: DataFrame, catalog: Catalog) -> None:
     )
     if unknown:
         raise UnknownTableError(unknown[0]["table"], known)
-
-
-def changes_column_check(op: Column) -> Column:
-    """Normalize operation spelling; UNSET rows are skipped upstream
-    (/root/reference/sinker/sinker.go:169-171)."""
-    return F.upper(op)

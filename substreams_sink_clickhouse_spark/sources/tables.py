@@ -14,6 +14,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from substreams_sink_clickhouse_spark import memo
 from substreams_sink_clickhouse_spark.session import tune_session
 
 TABLE_NAMES = [
@@ -32,16 +33,6 @@ TABLE_NAMES = [
 #: Columns that arrive as long nanos under ``nanosAsLong`` and must be
 #: converted back to TimestampType.
 _NANOS_COLUMNS = {"events": ["ts"]}
-
-#: Plan-object memo: re-reading the same table re-lists files and
-#: re-reads parquet footers on the driver (~100 ms each) — pure
-#: overhead when many queries hit the same tables in one session.
-_PLAN_CACHE: dict[tuple[int, str, str], DataFrame] = {}
-
-#: Warm buffer pool (opt-in, see ``warm_tables``): hot tables pinned
-#: in memory as partitioned columnar batches.  Consulted by
-#: ``load_table`` before the cold parquet path.
-_HOT_CACHE: dict[tuple[int, str, str], DataFrame] = {}
 
 #: Tables worth pinning, and their in-memory partition fan-out.  Only
 #: the compute-dense corpus tables qualify: their per-row work
@@ -93,43 +84,39 @@ def warm_tables(
         n = _HOT_LAYOUT.get(name)
         if n is None:
             continue
-        key = (id(spark), sf_dir, name)
-        if key in _HOT_CACHE:
-            continue
         df = load_table(spark, sf_dir, name)
+        if df.is_cached:  # pinned already
+            continue
         hot = df.repartition(n).cache()
         hot.count()  # materialize now, not on first query
-        _HOT_CACHE[key] = hot
+        memo.put(spark, "tables", (sf_dir, name), hot)
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Load one fixture table; normalize nano-timestamp columns.
-    Memoizes the DataFrame (logical plan) per (session, dir, table).
+    Memoized per (session, dir, table), since a re-read re-lists files
+    and parquet footers (~100 ms); after ``warm_tables``, the pinned one.
 
     Compute-dense callers should wrap the result in
     ``functions.skew.ensure_parallelism`` — a parquet row group is one
     Spark task, so a small single-row-group file scans single-threaded
     regardless of cluster size."""
     tune_session(spark)
-    key = (id(spark), sf_dir, name)
-    if key in _HOT_CACHE:
-        return _HOT_CACHE[key]
-    if key in _PLAN_CACHE:
-        return _PLAN_CACHE[key]
+    return memo.per_session(
+        spark, "tables", (sf_dir, name), lambda: _read_table(spark, sf_dir, name)
+    )
+
+
+def _read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
     for col in _NANOS_COLUMNS.get(name, []):
         if dict(df.dtypes).get(col) == "bigint":
             # integer nanos -> micros (exact: fixture is micro-granular)
             df = df.withColumn(col, F.timestamp_micros(F.expr(f"{col} div 1000")))
-    _PLAN_CACHE[key] = df
     return df
-
-
-def load_tables(spark: SparkSession, sf_dir: str, names: list[str] | None = None) -> dict[str, DataFrame]:
-    return {name: load_table(spark, sf_dir, name) for name in (names or TABLE_NAMES)}
 
 
 def register_views(spark: SparkSession, sf_dir: str, names: list[str] | None = None) -> None:
     """Register fixture tables as temp views for ``spark.sql`` queries."""
-    for name, df in load_tables(spark, sf_dir, names).items():
-        df.createOrReplaceTempView(name)
+    for name in names or TABLE_NAMES:
+        load_table(spark, sf_dir, name).createOrReplaceTempView(name)

@@ -8,10 +8,11 @@ from __future__ import annotations
 import os
 
 import substreams_sink_clickhouse_spark.session as S
+from substreams_sink_clickhouse_spark import memo
 
 
 def test_stream_session_width_defaults_to_cores(spark):
-    S._STREAM_SESSIONS.clear()
+    memo.clear("stream_session")
     old = os.environ.pop("SPARK_GRAFT_STREAM_SHUFFLE", None)
     try:
         ss = S.stream_session(spark)
@@ -24,11 +25,11 @@ def test_stream_session_width_defaults_to_cores(spark):
     finally:
         if old is not None:
             os.environ["SPARK_GRAFT_STREAM_SHUFFLE"] = old
-        S._STREAM_SESSIONS.clear()
+        memo.clear("stream_session")
 
 
 def test_stream_session_width_env_override(spark):
-    S._STREAM_SESSIONS.clear()
+    memo.clear("stream_session")
     old = os.environ.get("SPARK_GRAFT_STREAM_SHUFFLE")
     os.environ["SPARK_GRAFT_STREAM_SHUFFLE"] = "6"
     try:
@@ -39,7 +40,7 @@ def test_stream_session_width_env_override(spark):
             del os.environ["SPARK_GRAFT_STREAM_SHUFFLE"]
         else:
             os.environ["SPARK_GRAFT_STREAM_SHUFFLE"] = old
-        S._STREAM_SESSIONS.clear()
+        memo.clear("stream_session")
 
 
 def test_iterate_session_is_memoized_aqe_off_child(spark):
@@ -59,7 +60,7 @@ def test_bad_shuffle_env_vars_raise_a_named_error(spark, monkeypatch):
     monkeypatch.setenv("SPARK_GRAFT_SHUFFLE", "lots")
     with pytest.raises(EnvVarError, match=r"\$SPARK_GRAFT_SHUFFLE .*'lots'"):
         S.get_spark("bad-env")
-    monkeypatch.setattr(S, "_STREAM_SESSIONS", {})
+    memo.clear("stream_session")
     monkeypatch.setenv("SPARK_GRAFT_STREAM_SHUFFLE", "0")
     with pytest.raises(EnvVarError, match=r"\$SPARK_GRAFT_STREAM_SHUFFLE .*'0'"):
         S.stream_session(spark)

@@ -42,7 +42,6 @@ def test_interactive_session_shares_data_not_conf(spark):
 
 def test_engine_warm_and_interactive(spark):
     eng = Engine(spark).warm(SF, ["embeddings"])
-    key = (id(spark), SF, "embeddings")
-    assert key in tmod._HOT_CACHE
+    assert tmod.load_table(spark, SF, "embeddings").is_cached
     child = eng.interactive()
     assert child.conf.get("spark.sql.adaptive.enabled") == "false"

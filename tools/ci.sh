@@ -17,6 +17,13 @@ if grep -nE '\b(2[0-9]{2}|3[0-9]{2})(-entry| queries| entries)' README.md; then
 fi
 echo "README clean"
 
+echo "== session caches key on the memo's scopes, never on object ids =="
+if grep -rnE --include='*.py' '\bid\(spark' substreams_sink_clickhouse_spark/ __spark_entry__.py; then
+  echo "FAIL: a cache keys on id(spark...) (use substreams_sink_clickhouse_spark/memo.py)"
+  exit 1
+fi
+echo "no id(spark...) keys"
+
 echo "== schema audit =="
 python tools/audit_schemas.py
 
@@ -60,5 +67,8 @@ if [ "$N_SKIPS" != "$N_KNOWN" ]; then
 fi
 echo "skips: $N_SKIPS, all pinned to the known env gate"
 rm -f "$PYTEST_OUT"
+
+echo "== benchmark harness tests (generator + expected-state model) =="
+python -m pytest perfbench/tests -q
 
 echo "CI green."
