@@ -85,10 +85,7 @@ def coerce_sql(expr: str, dtype: T.DataType) -> str:
     return f"CAST(({expr}) AS {dtype.simpleString()})"
 
 
-def coerce_fields(fields_col: Column, schema: T.StructType) -> dict[str, Column]:
+def coerce_fields(fields_col: Column, schema: T.StructType) -> list[Column]:
     """Project a ``map<string,string>`` fields column into one typed
     column per schema field (missing keys -> null)."""
-    return {
-        f.name: coerce(fields_col.getItem(f.name), f.dataType).alias(f.name)
-        for f in schema.fields
-    }
+    return [coerce(fields_col.getItem(f.name), f.dataType).alias(f.name) for f in schema.fields]

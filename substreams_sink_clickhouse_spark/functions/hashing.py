@@ -29,10 +29,6 @@ def md5_long(col: Column) -> Column:
     return F.conv(F.substring(F.md5(col), 1, 15), 16, 10).cast("long")
 
 
-def md5_long_seeded(col: Column, seed: int) -> Column:
-    return md5_long(F.concat(F.lit(f"{seed}:"), col))
-
-
 def md5_long_sql(expr: str) -> str:
     """Spark SQL text of :func:`md5_long` (for use inside lambdas)."""
     return f"CAST(CONV(SUBSTR(MD5({expr}), 1, 15), 16, 10) AS BIGINT)"

@@ -734,20 +734,19 @@ SPECS: list[QuerySpec] = [
 
 
 def _q96_incremental_rollup(spark: SparkSession, sf: str) -> DataFrame:
-    """Materialized-view parity under the oracle gate: feed the events
-    table through ``IncrementalAggregate`` in three epoch chunks, then
-    read the maintained store.  The invariant the oracle checks is the
-    whole point of AggregatingMergeTree: incrementally-folded partials
-    == the one-shot aggregate over all the data.  Per epoch the cost is
-    O(batch + touched groups); history is never rescanned."""
-    from substreams_sink_clickhouse_spark.streaming.mataggs import (
-        IncrementalAggregate,
-    )
+    """Materialized-view parity under the oracle gate: fold the events
+    table into an ``IncrementalAggregate`` in three epoch chunks, each
+    committed by a ``TableStateStore`` manifest swap (the ingest
+    pipeline's rollup path), then read the rollup's table.  The
+    invariant the oracle checks is the whole point of
+    AggregatingMergeTree: incrementally-folded partials == the one-shot
+    aggregate over all the data."""
+    from substreams_sink_clickhouse_spark.streaming.mataggs import IncrementalAggregate
+    from substreams_sink_clickhouse_spark.streaming.pipeline import TableStateStore
 
     e = load_table(spark, sf, "events")
     agg = IncrementalAggregate(
-        spark,
-        _scratch_dir("mv_rollup_"),
+        "events_by_type",
         keys=["event_type"],
         measures={
             "n": ("count", "value"),
@@ -756,9 +755,12 @@ def _q96_incremental_rollup(spark: SparkSession, sf: str) -> DataFrame:
             "mx": ("max", "value"),
         },
     )
+    store = TableStateStore(spark, _scratch_dir("mv_rollup_"), Catalog())
+    store.catalog.register(agg.table_info(spark, e.schema))
     for chunk in range(3):
-        agg.update(e.filter(F.col("event_id") % 3 == chunk), version=chunk + 1)
-    cur = agg.current()
+        rows = e.filter(F.col("event_id") % 3 == chunk)
+        store.commit_epoch(chunk, {agg.name: agg.next_state(store, rows)}, None)
+    cur = store.table_state(agg.name)
     return cur.select(
         "event_type",
         "n",

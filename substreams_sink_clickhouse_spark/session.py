@@ -126,17 +126,16 @@ def stream_session(spark: SparkSession) -> SparkSession:
     45.3 -> 28.3 s, watermarked agg 18.9 -> 13.8 s — results
     hash-identical at every width (hash partitioning only moves
     state, never changes it).  On a 32-core context the default width
-    is 32, exactly the previous fixed value.  Memoized per application."""
+    is 32, exactly the previous fixed value.  The variable is read on
+    every call; one child is memoized per application and width."""
+    width = _env_positive_int("SPARK_GRAFT_STREAM_SHUFFLE", spark.sparkContext.defaultParallelism)
 
     def build() -> SparkSession:
-        width = _env_positive_int(
-            "SPARK_GRAFT_STREAM_SHUFFLE", spark.sparkContext.defaultParallelism
-        )
         child = tune_session(spark.newSession())
         child.conf.set("spark.sql.shuffle.partitions", str(width))
         return child
 
-    return memo.per_app(spark, "stream_session", (), build)
+    return memo.per_app(spark, "stream_session", (width,), build)
 
 
 def get_spark(

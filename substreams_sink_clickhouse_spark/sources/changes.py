@@ -19,7 +19,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from substreams_sink_clickhouse_spark import memo
 from substreams_sink_clickhouse_spark.catalog import Catalog
 from substreams_sink_clickhouse_spark.errors import UnknownTableError
 
@@ -142,116 +141,6 @@ def decode_database_changes(
         F.coalesce(F.col("tc.pk"), F.lit("")).alias("pk"),
         F.col("tc.operation").alias("op"),
         # []Field{name,new_value} -> map[col -> value] (sinker.go:147-151)
-        F.map_from_entries(
-            F.expr("transform(tc.fields, f -> struct(f.name, f.new_value))")
-        ).alias("fields"),
-    )
-
-
-#: Fully-qualified message name the reference pins its stream to
-#: (/root/reference/cmd/substreams-sink-clickhouse/run.go:94; the
-#: legacy name sf.substreams.database.v1.DatabaseChanges is also
-#: accepted there).
-DATABASE_CHANGES_MESSAGE = "sf.substreams.sink.database.v1.DatabaseChanges"
-
-def protobuf_connector_available(spark: SparkSession) -> bool:
-    """True iff the spark-protobuf connector jar is loaded.
-
-    Probed with a throwaway ``from_protobuf`` plan against an empty
-    binary descriptor: an absent jar fails analysis with
-    ``[PROTOBUF_NOT_LOADED_SQL_FUNCTIONS_UNUSABLE]`` (a loaded jar
-    instead complains about the descriptor — which means it's there).
-    Probed once per application so callers can branch on availability
-    instead of guessing from arbitrary exceptions.
-    """
-    return memo.per_app(spark, "protobuf_connector", (), lambda: _probe_protobuf_connector(spark))
-
-
-def _probe_protobuf_connector(spark: SparkSession) -> bool:
-    try:
-        from pyspark.sql.protobuf.functions import from_protobuf
-
-        probe = spark.range(1).select(F.lit(b"").alias("v"))
-        probe.select(
-            from_protobuf(F.col("v"), "Probe", binaryDescriptorSet=b"")
-        ).schema
-        return True
-    except ImportError:
-        return False
-    except Exception as exc:  # noqa: BLE001 - classify probe outcome
-        return "PROTOBUF_NOT_LOADED" not in str(exc)
-
-
-def decode_database_changes_protobuf(
-    raw: DataFrame,
-    descriptor_path: str,
-    message_name: str = DATABASE_CHANGES_MESSAGE,
-    binary_col: str = "value",
-) -> DataFrame:
-    """Decode binary protobuf ``DatabaseChanges`` payloads — the actual
-    wire format of the reference (sinker/sinker.go:102-113) — via
-    Spark's ``from_protobuf``.
-
-    Requires the ``spark-protobuf`` connector jar (ship it with
-    ``--packages org.apache.spark:spark-protobuf_2.13:<spark-version>``)
-    and a compiled FileDescriptorSet for database.proto; neither is in
-    this container, so the call degrades to an actionable error.  The
-    JSON path (:func:`decode_database_changes`) is wire-equivalent for
-    the engine's semantics: same flattened schema, same field
-    projection.
-    """
-    if not protobuf_connector_available(raw.sparkSession):
-        # Connector jar absent: fall back to the dependency-free wire
-        # parser — but ONLY for the one message type it implements and
-        # only when the envelope columns it needs are present.  With
-        # the connector PRESENT every failure (missing/bad descriptor,
-        # unknown message, decode errors) surfaces raw below: silently
-        # switching decoders on a real error would decode a different
-        # message type wrongly (round-1 advisory).
-        if message_name != DATABASE_CHANGES_MESSAGE:
-            raise NotImplementedError(
-                f"spark-protobuf connector unavailable and the pure wire "
-                f"parser only decodes {DATABASE_CHANGES_MESSAGE!r}, not "
-                f"{message_name!r}"
-            )
-        from substreams_sink_clickhouse_spark.sources.protobuf_wire import (
-            decode_database_changes_protobuf_pure,
-        )
-
-        if "block_num" in raw.columns and "block_id" in raw.columns:
-            return decode_database_changes_protobuf_pure(raw, binary_col=binary_col)
-        raise NotImplementedError(
-            "protobuf decode needs either the spark-protobuf connector "
-            "(org.apache.spark:spark-protobuf + descriptor set) or "
-            "block_num/block_id envelope columns for the pure-Python "
-            "wire parser (sources/protobuf_wire.py); use "
-            "decode_database_changes (JSON) otherwise."
-        )
-
-    from pyspark.sql.protobuf.functions import from_protobuf
-
-    parsed = raw.select(
-        from_protobuf(
-            F.col(binary_col), message_name, descFilePath=descriptor_path
-        ).alias("msg")
-    )
-    exploded = parsed.select(
-        F.col("msg.block_num").alias("block_num"),
-        F.col("msg.block_id").alias("block_id"),
-        F.explode("msg.table_changes").alias("tc"),
-    )
-    return exploded.select(
-        F.coalesce(F.col("block_num"), F.lit(0)).alias("block_num"),
-        F.coalesce(F.col("block_id"), F.lit("")).alias("block_id"),
-        F.coalesce(F.col("tc.ordinal"), F.lit(0)).alias("ordinal"),
-        # proto3 string defaults: a change missing table/pk carries ""
-        # on the wire (pb/.../database.pb.go:122-132), so a JSON payload
-        # omitting them normalizes the same way — a NULL pk would
-        # otherwise surface as an opaque null-bucket crash deep in the
-        # flush summary instead of a clean unknown-table error
-        F.coalesce(F.col("tc.table"), F.lit("")).alias("table"),
-        F.coalesce(F.col("tc.pk"), F.lit("")).alias("pk"),
-        F.col("tc.operation").alias("op"),
         F.map_from_entries(
             F.expr("transform(tc.fields, f -> struct(f.name, f.new_value))")
         ).alias("fields"),

@@ -3,28 +3,29 @@ ClickHouse materialized-view / AggregatingMergeTree pattern the
 reference's users rely on (sink a stream, keep rollups current without
 rescanning).
 
-``IncrementalAggregate`` stores algebraic partials (count / sum / min /
-max; avg = sum÷count at read) keyed by group columns, and folds each
-micro-batch's partials into the store with one outer join — O(batch +
-touched groups) per update, never a rescan of history.  State lives in
-a versioned parquet dir with an atomic pointer swap, mirroring the
-table-state store's commit discipline.
+``IncrementalAggregate`` describes a rollup: its table name, group
+keys and algebraic measures (count / sum / min / max; avg = sum÷count
+at read).  Its partials are a table of a ``TableStateStore``: each
+batch's partials fold into the stored ones with one full outer join,
+and the result is staged through ``commit_epoch(new_states=...)``, so
+the epoch's one manifest swap commits table state, cursor and rollups
+together, and history, reorg rollback, time travel and vacuum cover
+rollups with no code of their own.
 
 Scale notes: the combine join shuffles on the group key only; batch
 partials are map-side-combined by Catalyst before they ever reach the
-join.  For very high-cardinality keys, store-side bucketing (as in
-``TableStateStore``) bounds the rewrite; aggregate stores are usually
-small enough that a full rewrite per epoch is acceptable.
+join.  Rollups are usually small, so every epoch rewrites all of a
+rollup's buckets.
 """
 
 from __future__ import annotations
 
-import json
-import os
-import tempfile
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
+
+from substreams_sink_clickhouse_spark.catalog import TableInfo
+from substreams_sink_clickhouse_spark.functions.localdata import empty_df
 
 #: measure spec -> (batch partial, combine(old, new))
 _ALGEBRAIC = {
@@ -48,37 +49,20 @@ _ALGEBRAIC = {
 
 
 class IncrementalAggregate:
-    """A continuously-maintained grouped aggregate.
+    """A continuously-maintained grouped aggregate, stored as table
+    ``name``.
 
     ``measures`` maps output column -> ("sum"|"count"|"min"|"max",
     input column); ``count`` ignores its input column.
     """
 
-    def __init__(
-        self,
-        spark: SparkSession,
-        path: str,
-        keys: list[str],
-        measures: dict[str, tuple[str, str]],
-    ):
-        for name, (kind, _) in measures.items():
+    def __init__(self, name: str, keys: list[str], measures: dict[str, tuple[str, str]]):
+        for measure, (kind, _) in measures.items():
             if kind not in _ALGEBRAIC:
-                raise ValueError(f"unsupported measure {name}: {kind}")
-        self.spark = spark
-        self.path = path
+                raise ValueError(f"unsupported measure {measure}: {kind}")
+        self.name = name
         self.keys = keys
         self.measures = measures
-        os.makedirs(path, exist_ok=True)
-
-    @property
-    def _pointer(self) -> str:
-        return os.path.join(self.path, "current.json")
-
-    def _current_dir(self) -> str | None:
-        if not os.path.exists(self._pointer):
-            return None
-        with open(self._pointer, encoding="utf-8") as fh:
-            return json.load(fh)["dir"]
 
     def _batch_partials(self, batch: DataFrame) -> DataFrame:
         aggs = [
@@ -87,39 +71,25 @@ class IncrementalAggregate:
         ]
         return batch.groupBy(*self.keys).agg(*aggs)
 
-    def update(self, batch: DataFrame, version: int | None = None) -> None:
-        """Fold one batch into the stored partials (atomic swap)."""
-        partials = self._batch_partials(batch)
-        current_dir = self._current_dir()
-        if current_dir is None:
-            merged = partials
-        else:
-            stored = self.spark.read.parquet(current_dir)
-            o = stored.alias("o")
-            n = partials.alias("n")
-            # keys=[] is a global rollup: one stored row, combine 1:1
-            cond = (
-                [o[k].eqNullSafe(n[k]) for k in self.keys]
-                if self.keys
-                else F.lit(True)
-            )
-            merged = o.join(n, cond, "full_outer").select(
-                *[F.coalesce(o[k], n[k]).alias(k) for k in self.keys],
-                *[
-                    _ALGEBRAIC[kind][1](o[name], n[name]).alias(name)
-                    for name, (kind, _) in self.measures.items()
-                ],
-            )
-        new_dir = tempfile.mkdtemp(prefix="v", dir=self.path)
-        merged.write.mode("overwrite").parquet(new_dir)
-        fd, tmp = tempfile.mkstemp(dir=self.path, suffix=".ptr")
-        with os.fdopen(fd, "w", encoding="utf-8") as fh:
-            json.dump({"dir": new_dir, "version": version}, fh)
-        os.replace(tmp, self._pointer)
+    def table_info(self, spark: SparkSession, source: T.StructType) -> TableInfo:
+        """The rollup's store table over rows of schema ``source``: the
+        partials' columns, bucketed on the first of them."""
+        schema = self._batch_partials(empty_df(spark, source)).schema
+        return TableInfo(self.name, schema, schema.fieldNames()[0])
 
-    def current(self) -> DataFrame:
-        """The maintained aggregate as of the last update."""
-        current_dir = self._current_dir()
-        if current_dir is None:
-            raise ValueError("no aggregate state yet; call update() first")
-        return self.spark.read.parquet(current_dir)
+    def next_state(self, store, batch: DataFrame) -> tuple[DataFrame, list[int]]:
+        """``store.commit_epoch`` ``new_states`` value that folds
+        ``batch`` into the stored partials: every bucket rewritten."""
+        o = store.table_state(self.name).alias("o")
+        n = self._batch_partials(batch).alias("n")
+        # keys=[] is a global rollup: one stored row, combine 1:1
+        cond = [o[k].eqNullSafe(n[k]) for k in self.keys] if self.keys else F.lit(True)
+        merged = o.join(n, cond, "full_outer").select(
+            *[F.coalesce(o[k], n[k]).alias(k) for k in self.keys],
+            *[
+                # e.g. decimal sums widen on +: keep the stored type
+                _ALGEBRAIC[kind][1](o[name], n[name]).cast(n.schema[name].dataType).alias(name)
+                for name, (kind, _) in self.measures.items()
+            ],
+        )
+        return merged, list(range(store.table_n_buckets(self.name)))

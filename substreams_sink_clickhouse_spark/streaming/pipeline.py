@@ -14,7 +14,9 @@ effectively-once is achieved the way Spark sinks do it:
 * a tiny JSON manifest is then swapped atomically (``os.replace``) to
   point readers at the new versions and record the applied epoch, its
   head block and the module's cursor row — the epoch's one commit
-  point, so the cursor can never run ahead of the state;
+  point, so the cursor can never run ahead of the state.  Attached
+  rollups (``attach_rollup``) are tables of the same store, staged
+  with the epoch, so the swap commits them too;
 * on restart/replay of an epoch the manifest shows it already applied
   and the batch becomes a no-op (idempotent replay over the
   at-least-once file source — same net semantics as the reference's
@@ -61,6 +63,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from substreams_sink_clickhouse_spark.catalog import Catalog
+from substreams_sink_clickhouse_spark.functions.coercion import coerce_fields
 from substreams_sink_clickhouse_spark.functions.localdata import empty_df
 from substreams_sink_clickhouse_spark.operators.merge import (
     apply_table_ops,
@@ -1167,11 +1170,15 @@ class ChangesIngestPipeline:
 
     def attach_rollup(self, table: str, rollup) -> None:
         """Attach an :class:`~...streaming.mataggs.IncrementalAggregate`
-        to a table: every committed epoch folds that epoch's inserted
-        rows into the rollup — the ClickHouse materialized-view pattern
-        (updates/deletes are not retracted, exactly like ClickHouse MVs
-        over a MergeTree insert stream)."""
-        self.catalog.get(table)  # validate
+        to a table: every epoch folds its inserted rows into the
+        rollup, a table of this pipeline's store (``table(rollup.name)``)
+        committed by the epoch's manifest swap — the ClickHouse
+        materialized-view pattern (updates/deletes are not retracted,
+        exactly like ClickHouse MVs over a MergeTree insert stream).
+        Changes naming the rollup's table stay unknown."""
+        if rollup.name in self.catalog.tables:
+            raise ValueError(f"rollup {rollup.name!r} is already a table")
+        self.catalog.register(rollup.table_info(self.spark, self.catalog.get(table).schema))
         self._rollups.setdefault(table, []).append(rollup)
 
     # -- batch kernel -------------------------------------------------
@@ -1207,9 +1214,10 @@ class ChangesIngestPipeline:
             # against the catalog — same UnknownTableError contract as
             # validate_change_tables), and the cursor head via max_by.
             # It is also the action that materializes the batch cache.
-            bucket = self.state.batch_bucket_expr(
-                list(self.catalog.tables), manifest_tables
-            ).alias("b")
+            # Rollup tables are written by their rollups only.
+            rollups = {r.name for rs in self._rollups.values() for r in rs}
+            known = [t for t in self.catalog.tables if t not in rollups]
+            bucket = self.state.batch_bucket_expr(known, manifest_tables).alias("b")
             summary = (
                 changes.groupBy("table", bucket)
                 .agg(
@@ -1222,7 +1230,6 @@ class ChangesIngestPipeline:
             tp = mark("window_summary", t0)
             if not summary:
                 return
-            known = list(self.catalog.tables)
             unknown = sorted({r["table"] for r in summary} - set(known))
             if unknown:
                 raise UnknownTableError(unknown[0], known)
@@ -1322,6 +1329,13 @@ class ChangesIngestPipeline:
                         buckets,
                     )
                 observations.append(obs)
+            for name, attached in self._rollups.items():
+                if name in affected:
+                    # the epoch's inserted rows, typed like the table's
+                    rows = live.filter((F.col("table") == name) & (F.col("op") == "CREATE")).select(
+                        *coerce_fields(F.col("fields"), self.catalog.get(name).schema)
+                    )
+                    new_states.update((r.name, r.next_state(self.state, rows)) for r in attached)
             cursor = Cursor.at_epoch(self.module_hash, epoch_id, head_num, head_id)
             tp = mark("plan", tp)
             self.state.commit_epoch(
@@ -1331,22 +1345,6 @@ class ChangesIngestPipeline:
             for c in delta_caches:
                 c.unpersist()
             tp = mark("commit", tp)
-            for name, rollups in self._rollups.items():
-                if name not in affected or not rollups:
-                    continue
-                info = self.catalog.get(name)
-                from substreams_sink_clickhouse_spark.functions.coercion import coerce
-
-                created = live.filter(
-                    (F.col("table") == name) & (F.col("op") == "CREATE")
-                ).select(
-                    *[
-                        coerce(F.col("fields").getItem(f.name), f.dataType).alias(f.name)
-                        for f in info.schema.fields
-                    ]
-                )
-                for rollup in rollups:
-                    rollup.update(created, version=epoch_id)
             if self.clickhouse_sink is not None:
                 # wire parity: emit the same window as ClickHouse SQL
                 # (INSERT / ALTER UPDATE / DELETE + cursor update,
@@ -1419,36 +1417,22 @@ class ChangesIngestPipeline:
         changes_path: str,
         live: bool = False,
         max_files_per_trigger: int | None = None,
-        descriptor_path: str | None = None,
     ):
         """Run the ingest stream over the reference's BINARY wire
         format: a parquet stream of BlockScopedData-shaped rows
         ``(block_num long, block_id string, value binary)`` where
         ``value`` is a serialized ``DatabaseChanges`` message
-        (sinker/sinker.go:95-113).
-
-        With ``descriptor_path`` set, decoding goes through
-        ``decode_database_changes_protobuf`` — the spark-protobuf
-        connector when its jar is loaded, else the dependency-free
-        wire codec.  Without a descriptor it uses the wire codec
-        directly (``sources/protobuf_wire.py``).  Duplicate field
-        names within a change resolve last-wins on every path
-        (pinned at pipeline init), matching sinker.go's map
-        assignment.  Either way the flush kernel downstream is
-        identical to the JSONL path."""
-        from substreams_sink_clickhouse_spark.sources.changes import (
-            decode_database_changes_protobuf,
-        )
+        (sinker/sinker.go:95-113), decoded by the dependency-free wire
+        codec (``sources/protobuf_wire.py``).  Duplicate field names
+        within a change resolve last-wins (pinned at pipeline init),
+        matching sinker.go's map assignment.  The flush kernel
+        downstream is identical to the JSONL path."""
         from substreams_sink_clickhouse_spark.sources.protobuf_wire import (
             decode_database_changes_protobuf_pure,
         )
 
         def process(raw_df: DataFrame, epoch_id: int) -> None:
-            if descriptor_path is not None:
-                decoded = decode_database_changes_protobuf(raw_df, descriptor_path)
-            else:
-                decoded = decode_database_changes_protobuf_pure(raw_df)
-            self.process_batch(decoded, epoch_id)
+            self.process_batch(decode_database_changes_protobuf_pure(raw_df), epoch_id)
 
         return self._start_stream(
             "parquet", "block_num long, block_id string, value binary",

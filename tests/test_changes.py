@@ -65,20 +65,6 @@ def test_validate_known_table_passes(spark, changes_df):
     validate_change_tables(changes, cat)  # no raise
 
 
-def test_protobuf_decode_gated(spark):
-    """No spark-protobuf connector in this container: the protobuf wire
-    path must degrade to an actionable error, not a raw ClassNotFound."""
-    import pytest
-
-    from substreams_sink_clickhouse_spark.sources.changes import (
-        decode_database_changes_protobuf,
-    )
-
-    raw = spark.createDataFrame([(bytearray(b"\x01"),)], "value: binary")
-    with pytest.raises(NotImplementedError, match="spark-protobuf"):
-        decode_database_changes_protobuf(raw, "/tmp/nonexistent.desc").collect()
-
-
 def test_kafka_source_gated(spark):
     """No spark-sql-kafka connector in this container: the Kafka
     transport must degrade to an actionable error."""
@@ -169,28 +155,6 @@ def test_protobuf_decode_matches_json_decode(spark):
     )
 
 
-def test_protobuf_connector_falls_back_to_pure_decoder(spark):
-    from substreams_sink_clickhouse_spark.sources.changes import (
-        decode_database_changes_protobuf,
-    )
-    from substreams_sink_clickhouse_spark.sources.protobuf_wire import (
-        encode_database_changes,
-    )
-
-    wire = encode_database_changes(
-        [{"table": "t", "pk": "k", "ordinal": 1, "op": "CREATE",
-          "fields": {"a": "1"}}]
-    )
-    raw = spark.createDataFrame(
-        [(9, "0xb9", bytearray(wire))], "block_num long, block_id string, value binary"
-    )
-    # no connector jar in this container -> must route to the pure parser
-    rows = decode_database_changes_protobuf(raw, "/tmp/nonexistent.desc").collect()
-    assert [(r["block_num"], r["table"], r["op"], dict(r["fields"])) for r in rows] == [
-        (9, "t", "CREATE", {"a": "1"})
-    ]
-
-
 def test_protobuf_wire_roundtrip_property():
     from hypothesis import given, settings
     from hypothesis import strategies as st
@@ -265,26 +229,6 @@ def test_wire_encoder_bytes_are_pinned():
     assert hashlib.sha256(wire).hexdigest() == (
         "735bee64024783bb84f741ca4c8f48ec26bc9ba4c00375527a80246c5f295745"
     )
-
-
-def test_protobuf_fallback_refuses_other_message_types(spark):
-    """Connector absent: the pure wire parser must only stand in for
-    DatabaseChanges — any other message type is an error, not a silent
-    mis-decode (round-1 advisory)."""
-    from substreams_sink_clickhouse_spark.sources.changes import (
-        decode_database_changes_protobuf,
-        protobuf_connector_available,
-    )
-
-    if protobuf_connector_available(spark):
-        pytest.skip("spark-protobuf connector present in this deployment")
-    raw = spark.createDataFrame(
-        [(1, "b1", bytearray(b"\x01"))], "block_num: long, block_id: string, value: binary"
-    )
-    with pytest.raises(NotImplementedError, match="only decodes"):
-        decode_database_changes_protobuf(
-            raw, "/tmp/whatever.desc", message_name="other.v1.Message"
-        )
 
 
 def test_missing_table_and_pk_normalize_to_proto3_defaults(spark):

@@ -1,7 +1,7 @@
-"""One commit point per epoch: the cursor row is committed by the same
-manifest swap as the epoch's table state, every manifest edit runs
-under one lock, and reorg rollback rewinds state, cursor and history
-together.
+"""One commit point per epoch: the cursor row and the attached rollup
+are committed by the same manifest swap as the epoch's table state,
+every manifest edit runs under one lock, and reorg rollback rewinds
+state, cursor, rollup and history together.
 
 Crash points and concurrent writers are injected by wrapping the
 store's own steps (``_write_buckets``, ``os.replace``) around
@@ -12,12 +12,14 @@ import sys
 import threading
 
 import pytest
+from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from substreams_sink_clickhouse_spark import errors
 from substreams_sink_clickhouse_spark.catalog import CURSORS_SCHEMA, Catalog, TableInfo
 from substreams_sink_clickhouse_spark.functions.localdata import local_df
 from substreams_sink_clickhouse_spark.streaming.cursors import Cursor, CursorStore
+from substreams_sink_clickhouse_spark.streaming.mataggs import IncrementalAggregate
 from substreams_sink_clickhouse_spark.streaming.pipeline import (
     ChangesIngestPipeline,
     TableStateStore,
@@ -38,10 +40,15 @@ class Crash(Exception):
 def _pipe(spark, wh):
     cat = Catalog()
     cat.register(TableInfo("kv", SCHEMA, "id"))
-    return ChangesIngestPipeline(
+    pipe = ChangesIngestPipeline(
         spark, cat, warehouse_dir=str(wh), checkpoint_dir=f"{wh}_ckpt",
         module_hash="m", n_buckets=4,
     )
+    pipe.attach_rollup("kv", IncrementalAggregate(
+        "kv_rollup", keys=["number"],
+        measures={"n": ("count", "id"), "lo": ("min", "id"), "hi": ("max", "id")},
+    ))
+    return pipe
 
 
 def _window(spark, block, ops):
@@ -58,6 +65,21 @@ def _window(spark, block, ops):
 
 def _rows(pipe):
     return {r["id"]: r["number"] for r in pipe.table("kv").collect()}
+
+
+def _rollup(pipe):
+    return {r["number"]: (r["n"], r["lo"], r["hi"]) for r in pipe.table("kv_rollup").collect()}
+
+
+def _one_shot(*windows):
+    """The rollup as one aggregate over the windows' CREATE rows."""
+    out = {}
+    for ops in windows:
+        for pk, op, n in ops:
+            if op == "CREATE":
+                count, lo, hi = out.get(n, (0, pk, pk))
+                out[n] = (count + 1, min(lo, pk), max(hi, pk))
+    return out
 
 
 def _block(pipe):
@@ -101,7 +123,10 @@ EPOCH1 = [("k1", "UPDATE", 100), ("k2", "DELETE", None), ("k8", "CREATE", 8)]
 
 def _outcome(pipe):
     man = pipe.state.read_manifest()
-    return _rows(pipe), pipe.cursors.get_cursor("m"), man["applied_epochs"], man["epoch_blocks"]
+    return (
+        _rows(pipe), _rollup(pipe), pipe.cursors.get_cursor("m"),
+        man["applied_epochs"], man["epoch_blocks"],
+    )
 
 
 @pytest.fixture(scope="module")
@@ -114,7 +139,8 @@ def uninterrupted(spark, tmp_path_factory):
 
 def _crash_after_bucket_write(n):
     """``_write_buckets`` that raises once its ``n``-th call has
-    written: 1 = the epoch's delta, 2 = its deletion vector."""
+    written: 1 = the epoch's delta, 2 = its deletion vector, 3 = the
+    rollup's partials."""
     real = TableStateStore._write_buckets
     calls = []
 
@@ -146,6 +172,7 @@ def _crash_at_swap(after):
 CRASH_POINTS = {
     "after_delta_write": (lambda: _crash_after_bucket_write(1), False),
     "after_dv_write": (lambda: _crash_after_bucket_write(2), False),
+    "after_rollup_stage": (lambda: _crash_after_bucket_write(3), False),
     "in_swap_before_replace": (lambda: _crash_at_swap(after=False), False),
     "right_after_swap": (lambda: _crash_at_swap(after=True), True),
 }
@@ -163,11 +190,55 @@ def test_crash_point_leaves_state_and_cursor_together(
     with pytest.raises(Crash):
         pipe.process_batch(epoch1, 1)
     monkeypatch.undo()
-    # the manifest and the cursor are both at epoch 0 or both at epoch 1
+    # the manifest, the cursor and the rollup are all at epoch 0 or
+    # all at epoch 1
     assert pipe.state.epoch_applied(1) is committed
     assert _block(pipe) == (2 if committed else 1)
+    assert _rollup(pipe) == _one_shot(EPOCH0, *([EPOCH1] if committed else []))
     pipe.process_batch(epoch1, 1)  # the stream's replay
     assert _outcome(pipe) == uninterrupted
+    assert _rollup(pipe) == _one_shot(EPOCH0, EPOCH1)
+
+
+# ------------------------------------------------------------ rollups
+
+def test_undo_rewinds_the_rollup_to_the_surviving_epochs(spark, tmp_path):
+    pipe = _pipe(spark, tmp_path / "wh")
+    e0 = [(f"k{i}", "CREATE", 1) for i in range(4)]
+    e1 = [("k4", "CREATE", 2), ("k5", "CREATE", 1), ("k0", "UPDATE", 9)]
+    e2 = [("k6", "CREATE", 3), ("k1", "DELETE", None)]
+    fork = [("k7", "CREATE", 4), ("k8", "CREATE", 1)]
+    for epoch, (block, ops) in enumerate([(10, e0), (20, e1), (30, e2)]):
+        pipe.process_batch(_window(spark, block, ops), epoch)
+    assert _rollup(pipe) == _one_shot(e0, e1, e2)
+    pipe.handle_block_undo_signal(last_valid_block=15)
+    assert _rollup(pipe) == _one_shot(e0)
+    pipe.process_batch(_window(spark, 25, fork), 3)  # the new fork
+    assert _rollup(pipe) == _one_shot(e0, fork)
+
+
+def test_vacuum_reclaims_superseded_rollup_versions(spark, tmp_path):
+    pipe = _pipe(spark, tmp_path / "wh")
+    windows = [[(f"k{e}{i}", "CREATE", e % 2) for i in range(2)] for e in range(4)]
+    for epoch, ops in enumerate(windows):
+        pipe.process_batch(_window(spark, epoch + 1, ops), epoch)
+    rollup_dir = tmp_path / "wh" / "kv_rollup"
+    assert sorted(os.listdir(rollup_dir)) == ["v0", "v1", "v2", "v3"]
+    deleted = pipe.state.vacuum(keep_epochs=1)
+    assert {str(rollup_dir / "v0"), str(rollup_dir / "v1")} <= set(deleted)
+    assert sorted(os.listdir(rollup_dir)) == ["v2", "v3"]
+    assert _rollup(pipe) == _one_shot(*windows)
+    as_of = pipe.state.table_state_as_of("kv_rollup", 2).collect()
+    assert {r["number"]: (r["n"], r["lo"], r["hi"]) for r in as_of} == _one_shot(*windows[:3])
+
+
+def test_a_change_naming_the_rollup_table_is_unknown(spark, tmp_path):
+    pipe = _pipe(spark, tmp_path / "wh")
+    window = _window(spark, 1, [("k0", "CREATE", 1)]).withColumn("table", F.lit("kv_rollup"))
+    with pytest.raises(errors.UnknownTableError) as raised:
+        pipe.process_batch(window, 0)
+    assert raised.value.available == ["kv"]
+    assert not pipe.state.epoch_applied(0)
 
 
 # ---------------------------------------------------- concurrent writers

@@ -43,6 +43,19 @@ def test_stream_session_width_env_override(spark):
         memo.clear("stream_session")
 
 
+def test_stream_session_reads_the_width_on_each_call(spark, monkeypatch):
+    memo.clear("stream_session")
+    monkeypatch.setenv("SPARK_GRAFT_STREAM_SHUFFLE", "6")
+    six = S.stream_session(spark)
+    monkeypatch.setenv("SPARK_GRAFT_STREAM_SHUFFLE", "3")
+    three = S.stream_session(spark)
+    assert six.conf.get("spark.sql.shuffle.partitions") == "6"
+    assert three.conf.get("spark.sql.shuffle.partitions") == "3"
+    monkeypatch.setenv("SPARK_GRAFT_STREAM_SHUFFLE", "6")
+    assert S.stream_session(spark) is six
+    memo.clear("stream_session")
+
+
 def test_iterate_session_is_memoized_aqe_off_child(spark):
     it = S.iterate_session(spark)
     assert it is not spark

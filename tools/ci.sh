@@ -24,6 +24,14 @@ if grep -rnE --include='*.py' '\bid\(spark' substreams_sink_clickhouse_spark/ __
 fi
 echo "no id(spark...) keys"
 
+echo "== one commit protocol: only pipeline.py swaps files under streaming/ =="
+if grep -rnE --include='*.py' --exclude=pipeline.py 'os\.(replace|rename)|tempfile\.mk(d|s)temp' \
+    substreams_sink_clickhouse_spark/streaming/; then
+  echo "FAIL: a second commit protocol under streaming/ (commit through TableStateStore.edit_manifest)"
+  exit 1
+fi
+echo "no file swaps outside pipeline.py"
+
 echo "== schema audit =="
 python tools/audit_schemas.py
 
