@@ -120,12 +120,6 @@ class Catalog:
         self.register(new_info)
         return new_info
 
-    def validate_tables(self, names: list[str]) -> None:
-        """Reject unknown tables, like sinker/sinker.go:138-145."""
-        for name in names:
-            if name not in self.tables:
-                raise UnknownTableError(name, list(self.tables))
-
     def primary_keys(self) -> dict[str, str]:
         return {name: info.primary_key for name, info in self.tables.items()}
 

@@ -135,14 +135,14 @@ def build_parser() -> argparse.ArgumentParser:
         "--undo-buffer-size",
         type=int,
         default=0,
-        help="accepted for parity: the file/Kafka transports deliver final blocks only "
+        help="accepted for parity: the file transports deliver final blocks only "
         "(the reference forwards this to its gRPC client; reorgs here arrive as explicit "
         "undo signals handled by handle_block_undo_signal)",
     )
     run.add_argument(
         "--final-blocks-only",
         action="store_true",
-        help="accepted for parity: always true for the file/Kafka transports",
+        help="accepted for parity: always true for the file transports",
     )
 
     setup = sub.add_parser("setup", help="execute schema DDL (reference Loader.Setup, db/db.go:212-249)")

@@ -415,8 +415,8 @@ def apply_table_ops(target: DataFrame, ops: DataFrame, info: TableInfo) -> DataF
 
 
 def apply_table_ops_delta(
-    target_with_src: DataFrame, ops: DataFrame, info: TableInfo, cache: bool = True
-) -> tuple[DataFrame, DataFrame, DataFrame | None]:
+    target_with_src: DataFrame, ops: DataFrame, info: TableInfo
+) -> tuple[DataFrame, DataFrame, DataFrame]:
     """Merge-on-read apply: instead of rewriting the target bucket,
     produce the two SIDECAR artifacts of this window —
 
@@ -442,11 +442,12 @@ def apply_table_ops_delta(
     Semantics identical to :func:`apply_table_ops`:
     UPDATE on a missing pk matches nothing; CREATE replaces an
     existing row (upsert); DELETE removes; an errored group (see
-    :func:`guard_merge_errors`) raises while the broadcast side is
-    built.  With ``cache=True`` the ops⋈target match (ops-sized,
-    tiny) is cached so the two output writes scan the bucket ONCE; the
-    third return value is the cached DataFrame for the caller to
-    unpersist after commit (None when ``cache=False``)."""
+    :func:`guard_merge_errors`) raises where ``ops`` is first
+    evaluated.  The ops⋈target match (ops-sized, tiny) is cached so the
+    two output writes scan the bucket ONCE; it is the third return
+    value, for the caller to unpersist once both are written.  ``ops``
+    is read twice (the broadcast and the CREATE rows), so a caller
+    passes a cached window to fold it once."""
     pk = info.primary_key
     # Spark string literals honor backslash escapes by default, so a
     # backslash in a name must double too (else 'a\b' parses as an
@@ -464,9 +465,7 @@ def apply_table_ops_delta(
         *[f"t.{bq(f.name)} AS {bq('__t_' + f.name)}" for f in info.schema.fields],
         "t.__src AS __t_src",
     )
-    cached = None
-    if cache:
-        matched = cached = matched.cache()
+    matched = matched.cache()
     created_cols, updated_cols = [], []
     for field in info.schema.fields:
         new_val = coerce_sql(f"__fields['{esc(field.name)}']", field.dataType)
@@ -481,7 +480,7 @@ def apply_table_ops_delta(
     mask = matched.where("__op IN ('CREATE', 'UPDATE', 'DELETE')").selectExpr(
         "__t_src AS src", "__pk AS pk"
     )
-    return delta, mask, cached
+    return delta, mask, matched
 
 
 def merge_changes(

@@ -123,11 +123,14 @@ def decode_database_changes(
         ).otherwise(tc_array)
     else:
         parsed = parsed.filter(~bad)
+    # project the block fields and the array BEFORE the explode, so the
+    # Generate carries neither the parsed message nor a second copy of
+    # its table_changes into every exploded row
     exploded = parsed.select(
         F.col("msg.block_num").alias("block_num"),
         F.col("msg.block_id").alias("block_id"),
-        F.explode(tc_array).alias("tc"),
-    )
+        tc_array.alias("__tc"),
+    ).select("block_num", "block_id", F.explode("__tc").alias("tc"))
     return exploded.select(
         F.coalesce(F.col("block_num"), F.lit(0)).alias("block_num"),
         F.coalesce(F.col("block_id"), F.lit("")).alias("block_id"),
@@ -154,41 +157,6 @@ def read_changes_jsonl(spark: SparkSession, path: str, streaming: bool = False) 
     else:
         raw = spark.read.text(path)
     return decode_database_changes(raw, "value")
-
-
-def read_changes_kafka(
-    spark: SparkSession,
-    bootstrap_servers: str,
-    topic: str,
-    starting_offsets: str = "earliest",
-) -> DataFrame:
-    """Kafka transport for the changes stream (SURVEY O1: the pragmatic
-    stand-in for the Substreams gRPC feed in a Spark deployment): one
-    message value = one serialized ``DatabaseChanges`` JSON.
-
-    Requires the ``spark-sql-kafka`` connector package
-    (``--packages org.apache.spark:spark-sql-kafka-0-10_2.13:<ver>``),
-    which is not bundled with this container's PySpark; without it the
-    call degrades to an actionable error.  The file-based
-    :func:`read_changes_jsonl` is the tested-equivalent path (same
-    decode, same downstream pipeline).
-    """
-    try:
-        raw = (
-            spark.readStream.format("kafka")
-            .option("kafka.bootstrap.servers", bootstrap_servers)
-            .option("subscribe", topic)
-            .option("startingOffsets", starting_offsets)
-            .load()
-        )
-        return decode_database_changes(raw, "value")
-    except Exception as exc:
-        raise NotImplementedError(
-            "the Kafka source requires the spark-sql-kafka connector "
-            "(org.apache.spark:spark-sql-kafka-0-10); use "
-            "read_changes_jsonl in environments without it. "
-            f"Underlying error: {exc}"
-        ) from exc
 
 
 def validate_change_tables(changes: DataFrame, catalog: Catalog) -> None:

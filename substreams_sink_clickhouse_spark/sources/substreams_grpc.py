@@ -330,7 +330,7 @@ class SubstreamsLiveSource:
             raise NotImplementedError(
                 "live Substreams ingest needs the grpcio package "
                 "(pip install grpcio); this container ships without it. "
-                "Use the JSONL / parquet-wire / Kafka sources instead — "
+                "Use the JSONL / parquet-wire sources instead — "
                 "request/response encoding, cursor resume, and spooling "
                 "are all exercised without the socket in "
                 "tests/test_substreams_grpc.py"

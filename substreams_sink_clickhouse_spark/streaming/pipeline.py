@@ -2,8 +2,13 @@
 
 ``readStream`` (JSONL/parquet DatabaseChanges) → decode → validate →
 distributed merge (operators/merge.py) → per-epoch versioned parquet
-table state + cursor row.  The reference's single DB transaction per
-flush (/root/reference/db/flush.go:12-69) has no parquet analog, so
+table state + cursor row.  An epoch decodes and folds its window once:
+the reduced ops are cached, the window summary that materializes them
+raises on any merge-rule violation before a file is written, and every
+table's apply, the rollups and the wire sink read that one frame.
+
+The reference's single DB transaction per flush
+(reference ``db/flush.go:12-69``) has no parquet analog, so
 effectively-once is achieved the way Spark sinks do it:
 
 * every micro-batch (epoch) writes each affected table's NEW state to
@@ -189,16 +194,19 @@ def _bucket_dv_bytes(val, memo: dict) -> int:
     return _parquet_dir_bytes(dv)
 
 
-def _observed_rows(obs) -> int:
-    """Best-effort read of a flush observation: an epoch whose commit
-    write produced no rows can leave the observation unset inside
-    foreachBatch (Spark returns an opaque assertion from ``get``).
-    Counters are observability, not correctness — treat unreadable as
-    0 rather than failing the committed batch."""
+def _cache(df: DataFrame) -> DataFrame:
+    """``df.cache()``, planned so that AQE may coalesce its shuffle
+    output: a window of a few hundred ops then reads back in one task,
+    not one per shuffle partition.  The conf is read when the cache
+    entry is built, so it is set for the ``cache()`` call only."""
+    conf = df.sparkSession.conf
+    key = "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning"
+    prior = conf.get(key)
+    conf.set(key, "true")
     try:
-        return int(obs.get["rows"])
-    except Exception:
-        return 0
+        return df.cache()
+    finally:
+        conf.set(key, prior)
 
 
 class _Staged(NamedTuple):
@@ -1185,7 +1193,15 @@ class ChangesIngestPipeline:
 
     def process_batch(self, changes: DataFrame, epoch_id: int) -> None:
         """foreachBatch body: one flush window
-        (/root/reference/db/flush.go:12-69 + sinker.go:119-131)."""
+        (reference ``db/flush.go:12-69`` + ``sinker.go:119-131``).
+
+        One pass over the window: ``live``, its reduced and
+        error-guarded ops, is cached, and the window summary is the
+        action that materializes it, so the decode and the fold run
+        once and a merge-rule violation raises there, before anything
+        is written.  Every other consumer (each table's apply, the
+        rollups and the wire sink) reads that one frame, which the
+        epoch releases on its way out."""
         t0 = time.time()
         phases = self.stats.phase_seconds
 
@@ -1205,61 +1221,37 @@ class ChangesIngestPipeline:
         if self.stop_block is not None:
             # exclusive stop, matching the reference's range convention
             changes = changes.filter(F.col("block_num") < self.stop_block)
-        changes = changes.cache()
+        # the cursor head rides along the decode: reduced ops carry no
+        # block numbers
+        head = Observation()
+        changes = changes.observe(
+            head, F.max("block_num").alias("num"), F.max_by("block_id", "block_num").alias("id")
+        )
+        live = _cache(guard_merge_errors(reduce_changes(changes, self.catalog.primary_keys())))
+        cached = [live]
         try:
-            # ONE summary aggregation replaces three separate actions
-            # (head block, table validation, affected buckets): the
-            # per-(table, pk-bucket) group-by yields the bucket list,
-            # the table-name domain for validation (checked driver-side
-            # against the catalog — same UnknownTableError contract as
-            # validate_change_tables), and the cursor head via max_by.
-            # It is also the action that materializes the batch cache.
-            # Rollup tables are written by their rollups only.
+            # ONE summary per (table, pk-bucket) of the reduced ops
+            # yields the affected buckets, each table's op count and the
+            # table-name domain, checked against the catalog (the
+            # validate_change_tables contract).  Rollup tables are
+            # written by their rollups only.
             rollups = {r.name for rs in self._rollups.values() for r in rs}
             known = [t for t in self.catalog.tables if t not in rollups]
             bucket = self.state.batch_bucket_expr(known, manifest_tables).alias("b")
-            summary = (
-                changes.groupBy("table", bucket)
-                .agg(
-                    F.max("block_num").alias("max_block"),
-                    F.expr("max_by(block_id, block_num)").alias("max_block_id"),
-                    F.count(F.lit(1)).alias("n_ops"),
-                )
-                .collect()
-            )
+            summary = live.groupBy("table", bucket).count().collect()
             tp = mark("window_summary", t0)
             if not summary:
                 return
             unknown = sorted({r["table"] for r in summary} - set(known))
             if unknown:
                 raise UnknownTableError(unknown[0], known)
-            # Affected pk-buckets come straight from the (cached) raw
-            # changes; the reconcile join then scans O(affected
-            # buckets) of the table and commit rewrites the same
-            # subset.  Merge-rule violations raise from INSIDE the
-            # commit write via the inline guard — safe because the
-            # manifest swap is the commit point: an aborted write
-            # leaves only an uncommitted version dir (vacuumable),
-            # never corrupt state.  Single-table windows therefore
-            # evaluate the merge fold exactly once, with no eager
-            # probe job and no cache materialization.
+            # the reconcile then scans O(affected buckets) of each
+            # table and the commit rewrites the same subset
             affected: dict[str, list[int]] = {}
             window_ops: dict[str, int] = {}
             for row in summary:
                 affected.setdefault(row["table"], []).append(int(row["b"]))
-                window_ops[row["table"]] = (
-                    window_ops.get(row["table"], 0) + int(row["n_ops"])
-                )
-            head_num = max(r["max_block"] for r in summary)
-            head_id = next(
-                r["max_block_id"] for r in summary if r["max_block"] == head_num
-            )
-            reduced = reduce_changes(changes, self.catalog.primary_keys())
-            live = guard_merge_errors(reduced)
-            if len(affected) > 1:
-                # several tables each filter the reduced ops — cache so
-                # the fold is computed once, not once per table
-                live = live.cache()
+                window_ops[row["table"]] = window_ops.get(row["table"], 0) + row["count"]
 
             def sidecar_eligible(name: str, buckets: list[int]) -> bool:
                 """Deletion-vector commit iff the table has committed
@@ -1301,34 +1293,17 @@ class ChangesIngestPipeline:
 
             new_states: dict[str, tuple[DataFrame, list[int]]] = {}
             sidecar_states: dict[str, tuple[DataFrame, DataFrame, list[int], int]] = {}
-            observations = []
-            delta_caches = []
             for name, buckets in affected.items():
                 info = self.catalog.get(name)
                 ops = live.filter(F.col("table") == name)
-                obs = Observation(f"flush_{epoch_id}_{name}")
                 if sidecar_eligible(name, buckets):
                     target = self.state.bucket_state(name, buckets, with_src=True)
-                    delta, mask, cached = apply_table_ops_delta(target, ops, info)
-                    sidecar_states[name] = (
-                        delta.observe(obs, F.count(F.lit(1)).alias("rows")),
-                        mask,
-                        buckets,
-                        window_ops[name],
-                    )
-                    if cached is not None:
-                        delta_caches.append(cached)
+                    delta, mask, matched = apply_table_ops_delta(target, ops, info)
+                    cached.append(matched)
+                    sidecar_states[name] = (delta, mask, buckets, window_ops[name])
                 else:
                     target = self.state.bucket_state(name, buckets)
-                    new_state = apply_table_ops(target, ops, info)
-                    # row count rides along with the commit write via the
-                    # Observation API — no separate counting action
-                    # re-running the reconcile join per table
-                    new_states[name] = (
-                        new_state.observe(obs, F.count(F.lit(1)).alias("rows")),
-                        buckets,
-                    )
-                observations.append(obs)
+                    new_states[name] = (apply_table_ops(target, ops, info), buckets)
             for name, attached in self._rollups.items():
                 if name in affected:
                     # the epoch's inserted rows, typed like the table's
@@ -1336,32 +1311,30 @@ class ChangesIngestPipeline:
                         *coerce_fields(F.col("fields"), self.catalog.get(name).schema)
                     )
                     new_states.update((r.name, r.next_state(self.state, rows)) for r in attached)
-            cursor = Cursor.at_epoch(self.module_hash, epoch_id, head_num, head_id)
+            got = head.get
+            cursor = Cursor.at_epoch(self.module_hash, epoch_id, got["num"], got["id"])
             tp = mark("plan", tp)
             self.state.commit_epoch(
                 epoch_id, new_states, cursor,
                 sidecar_states=sidecar_states or None, base=manifest_tables,
             )
-            for c in delta_caches:
-                c.unpersist()
             tp = mark("commit", tp)
             if self.clickhouse_sink is not None:
                 # wire parity: emit the same window as ClickHouse SQL
                 # (INSERT / ALTER UPDATE / DELETE + cursor update,
                 # /root/reference/db/flush.go:12-63)
-                self.clickhouse_sink.write_batch(
-                    live.filter(F.col("err").isNull()), epoch_id
-                )
+                self.clickhouse_sink.write_batch(live, epoch_id)
                 self.clickhouse_sink.execute_statement(
                     cursor_update_statement(
                         cursor.id, cursor.cursor, cursor.block_num, cursor.block_id
                     )
                 )
-            n_entries = sum(_observed_rows(o) for o in observations)
-            live.unpersist()
         finally:
-            changes.unpersist()
-        self.stats.record_flush(n_entries, time.time() - t0, head_num)
+            for df in cached:
+                df.unpersist()
+        # the reduced ops, as the reference counts its flushed entries
+        n_entries = sum(window_ops.values())
+        self.stats.record_flush(n_entries, time.time() - t0, cursor.block_num)
         if self.on_batch:
             self.on_batch(epoch_id, n_entries)
 
@@ -1487,7 +1460,7 @@ class ChangesIngestPipeline:
         stream errors with backoff, resuming from the stored cursor).
         The engine's analog composes three existing guarantees:
 
-        * the file/Kafka source checkpoint replays the in-flight epoch
+        * the file source checkpoint replays the in-flight epoch
           after a crash (exactly-once source progress);
         * ``process_batch`` commits are idempotent per epoch (the
           manifest is the commit point — a replayed epoch rewrites the

@@ -17,7 +17,7 @@ only the keys it touched.
 from __future__ import annotations
 
 from collections.abc import Iterator
-from typing import TYPE_CHECKING, Any
+from typing import TYPE_CHECKING
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -92,8 +92,7 @@ def streaming_pending_ops(changes_stream: DataFrame) -> DataFrame:
 
 
 def _fold_rows(op, fields, err, rows) -> tuple:
-    """Pure fold of ordered change rows onto (op, fields, err) state —
-    shared by both stateful implementations."""
+    """Pure fold of ordered change rows onto (op, fields, err) state."""
     for _, row in rows.iterrows():
         kind = str(row["op"]).upper()
         new_fields = dict(row["fields"] or {})
@@ -114,66 +113,3 @@ def _fold_rows(op, fields, err, rows) -> tuple:
         elif kind == "DELETE":
             op, fields = "DELETE", {}
     return op, fields, err
-
-
-def streaming_pending_ops_tws(changes_stream: DataFrame) -> DataFrame:
-    """The same cross-batch fold on ``transformWithStateInPandas`` —
-    Spark 4's arbitrary-stateful-processing API (typed state handles,
-    RocksDB-backed).  Functionally identical to
-    :func:`streaming_pending_ops`; kept as the forward path since
-    ``applyInPandasWithState`` is the legacy API.  Requires the
-    RocksDB state-store provider on the session:
-
-        spark.sql.streaming.stateStore.providerClass =
-          org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider
-
-    plus the ``protobuf`` python package (the API's state protocol is
-    protobuf-serialized); environments without it should use
-    :func:`streaming_pending_ops`.
-    """
-    import json
-
-    import pandas as pd
-    from pyspark.sql.streaming import StatefulProcessor, StatefulProcessorHandle
-
-    class PendingOpProcessor(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._state = handle.getValueState("pending", _STATE_SCHEMA)
-
-        def handleInputRows(self, key, rows, timerValues) -> "pd.DataFrame":
-            table, pk = key
-            if self._state.exists():
-                op, fields_json, err = self._state.get()
-                fields = json.loads(fields_json) if fields_json else {}
-            else:
-                op, fields, err = "NONE", {}, None
-            batch = pd.concat(list(rows), ignore_index=True)
-            batch = batch.sort_values(["block_num", "ordinal"])
-            op, fields, err = _fold_rows(op, fields, err, batch)
-            self._state.update((op, json.dumps(fields), err))
-            yield pd.DataFrame(
-                [
-                    {
-                        "table": table,
-                        "pk": pk,
-                        "op": op,
-                        "fields_json": json.dumps(fields),
-                        "err": err,
-                    }
-                ]
-            )
-
-        def close(self) -> None:
-            pass
-
-    return (
-        changes_stream.withColumn("op", F.upper("op"))
-        .filter(F.col("op").isin("CREATE", "UPDATE", "DELETE"))
-        .groupBy("table", "pk")
-        .transformWithStateInPandas(
-            statefulProcessor=PendingOpProcessor(),
-            outputStructType=PENDING_OP_SCHEMA,
-            outputMode="Update",
-            timeMode="None",
-        )
-    )

@@ -65,15 +65,32 @@ def test_validate_known_table_passes(spark, changes_df):
     validate_change_tables(changes, cat)  # no raise
 
 
-def test_kafka_source_gated(spark):
-    """No spark-sql-kafka connector in this container: the Kafka
-    transport must degrade to an actionable error."""
-    import pytest
+def _plan_nodes(plan):
+    yield plan
+    kids = plan.children()
+    for i in range(kids.size()):
+        yield from _plan_nodes(kids.apply(i))
 
-    from substreams_sink_clickhouse_spark.sources.changes import read_changes_kafka
 
-    with pytest.raises(NotImplementedError, match="spark-sql-kafka"):
-        read_changes_kafka(spark, "localhost:9092", "changes")
+@pytest.mark.parametrize("on_error", ["fail", "drop"])
+def test_decode_explode_carries_only_the_block_fields(spark, on_error):
+    """The explode's input holds the block number, the block id and
+    the (guarded) change array, not the whole parsed message, which
+    would otherwise ride along in every exploded row."""
+    msgs = [_msg(1, pk="a"), _msg(2, pk="b", op="UPDATE", fields={"a": "2", "b": "y"})]
+    raw = spark.createDataFrame([(json.dumps(m),) for m in msgs], "value string")
+    decoded = decode_database_changes(raw, "value", on_error)
+    plan = decoded._jdf.queryExecution().optimizedPlan()
+    generates = [n for n in _plan_nodes(plan) if n.nodeName() == "Generate"]
+    assert len(generates) == 1
+    out = generates[0].child().output()
+    assert sorted(out.apply(i).name() for i in range(out.size())) == [
+        "__tc", "block_id", "block_num",
+    ]
+    assert sorted(tuple(r) for r in decoded.collect()) == [
+        (1, "0x1", 1, "t", "a", "CREATE", {"a": "1"}),
+        (2, "0x2", 1, "t", "b", "UPDATE", {"a": "2", "b": "y"}),
+    ]
 
 
 def test_protobuf_wire_roundtrip_pure_python():

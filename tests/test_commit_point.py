@@ -37,12 +37,12 @@ class Crash(Exception):
     """The injected failure."""
 
 
-def _pipe(spark, wh):
+def _pipe(spark, wh, **kwargs):
     cat = Catalog()
     cat.register(TableInfo("kv", SCHEMA, "id"))
     pipe = ChangesIngestPipeline(
         spark, cat, warehouse_dir=str(wh), checkpoint_dir=f"{wh}_ckpt",
-        module_hash="m", n_buckets=4,
+        module_hash="m", n_buckets=4, **kwargs,
     )
     pipe.attach_rollup("kv", IncrementalAggregate(
         "kv_rollup", keys=["number"],
@@ -239,6 +239,89 @@ def test_a_change_naming_the_rollup_table_is_unknown(spark, tmp_path):
         pipe.process_batch(window, 0)
     assert raised.value.available == ["kv"]
     assert not pipe.state.epoch_applied(0)
+
+
+# ------------------------------------------- one pass over the window
+
+def _epoch_dirs(wh, epoch):
+    """The version directories epoch ``epoch`` wrote, in any table."""
+    return sorted(
+        os.path.join(t, d)
+        for t in os.listdir(wh) if os.path.isdir(os.path.join(wh, t))
+        for d in os.listdir(os.path.join(wh, t)) if d in (f"v{epoch}", f"dv{epoch}")
+    )
+
+
+def _persistent_rdds(spark):
+    return spark.sparkContext._jsc.getPersistentRDDs().size()
+
+
+#: EPOCH1 plus a duplicate CREATE, which the fold rejects
+BAD_EPOCH1 = EPOCH1 + [("k9", "CREATE", 9), ("k9", "CREATE", 10)]
+
+
+def test_merge_violation_raises_before_any_epoch_directory(spark, tmp_path):
+    """The summary materializes the guarded fold, so a duplicate CREATE
+    raises before the sidecar epoch writes a delta, a dv or a rollup
+    directory, and the manifest is left as it was."""
+    wh = tmp_path / "wh"
+    pipe = _pipe(spark, wh)
+    pipe.process_batch(_window(spark, 1, EPOCH0), 0)
+    before = pipe.state.read_manifest()
+    with pytest.raises(Exception, match="invalid change sequence"):
+        pipe.process_batch(_window(spark, 2, BAD_EPOCH1), 1)
+    assert _epoch_dirs(wh, 1) == []
+    assert pipe.state.read_manifest() == before
+
+
+def test_unknown_table_raises_with_nothing_written(spark, tmp_path):
+    wh = tmp_path / "wh"
+    pipe = _pipe(spark, wh)
+    pipe.process_batch(_window(spark, 1, EPOCH0), 0)
+    before = pipe.state.read_manifest()
+    window = _window(spark, 2, EPOCH1).unionByName(
+        _window(spark, 2, [("x", "CREATE", 1)]).withColumn("table", F.lit("mystery"))
+    )
+    with pytest.raises(errors.UnknownTableError):
+        pipe.process_batch(window, 1)
+    assert _epoch_dirs(wh, 1) == []
+    assert pipe.state.read_manifest() == before
+
+
+@pytest.mark.parametrize("write_mode", ["auto", "rewrite"])
+def test_flushed_entries_count_the_reduced_ops(spark, tmp_path, write_mode):
+    """``n_entries`` is the window's reduced op count, as the
+    reference counts its flushed entries, on an initial load and on a
+    sidecar or rewrite epoch alike."""
+    seen = []
+    pipe = _pipe(spark, tmp_path / "wh", write_mode=write_mode,
+                 on_batch=lambda epoch, n: seen.append(n))
+    # 8 CREATEs (one updated in the same window) and a DELETE of an
+    # absent pk: 9 reduced ops, 8 rows written
+    load = EPOCH0 + [("k0", "UPDATE", 50), ("k9", "DELETE", None)]
+    pipe.process_batch(_window(spark, 1, load), 0)
+    pipe.process_batch(_window(spark, 2, EPOCH1), 1)
+    assert seen == [9, 3]
+    assert pipe.stats.flushed_entries == 12
+    layers = [v for v in pipe.state.read_manifest()["tables"]["kv"]["buckets"].values()
+              if isinstance(v, dict)]
+    assert bool(layers) is (write_mode == "auto")  # the epoch took the path asked for
+
+
+@pytest.mark.parametrize("outcome", ["committed", "merge_violation", "crash_in_commit"])
+def test_epoch_releases_every_cache_it_made(spark, tmp_path, monkeypatch, outcome):
+    pipe = _pipe(spark, tmp_path / "wh")
+    pipe.process_batch(_window(spark, 1, EPOCH0), 0)
+    window = _window(spark, 2, BAD_EPOCH1 if outcome == "merge_violation" else EPOCH1)
+    if outcome == "crash_in_commit":
+        monkeypatch.setattr(*_crash_after_bucket_write(1))
+    before = _persistent_rdds(spark)
+    if outcome == "committed":
+        pipe.process_batch(window, 1)
+    else:
+        with pytest.raises(Exception):
+            pipe.process_batch(window, 1)
+    assert _persistent_rdds(spark) == before
 
 
 # ---------------------------------------------------- concurrent writers

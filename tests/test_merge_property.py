@@ -147,7 +147,7 @@ def test_delta_apply_equals_rewrite_apply(spark, target_rows, ops_rows):
         for r in apply_table_ops(target, ops, info).collect()
     }
     tagged = target.selectExpr("*", "CAST(42 AS LONG) AS __src")
-    delta, mask, cached = apply_table_ops_delta(tagged, ops, info, cache=False)
+    delta, mask, matched = apply_table_ops_delta(tagged, ops, info)
     mask_rows = {(r["src"], r["pk"]) for r in mask.collect()}
     assert all(src == 42 for src, _ in mask_rows)
     survivors = {
@@ -156,4 +156,5 @@ def test_delta_apply_equals_rewrite_apply(spark, target_rows, ops_rows):
         if (42, r["id"]) not in mask_rows
     }
     got = survivors | {(r["id"], r["x"], r["y"]) for r in delta.collect()}
+    matched.unpersist()
     assert got == expected

@@ -130,87 +130,3 @@ def test_two_phase_agg_matches(spark):
         ).collect()
     }
     assert plain == two
-
-
-def test_tws_state_folds_across_batches(spark, tmp_path):
-    """Same cross-batch fold on transformWithStateInPandas (Spark 4's
-    arbitrary-stateful API, RocksDB-backed state).  Its state protocol
-    needs the protobuf python package — absent in this container, so
-    the test skips here and runs in full deployments."""
-    import os
-    import time
-
-    import pytest
-
-    pytest.importorskip("google.protobuf")
-
-    from substreams_sink_clickhouse_spark.sources.changes import decode_database_changes
-    from substreams_sink_clickhouse_spark.streaming.stateful import (
-        streaming_pending_ops_tws,
-    )
-
-    stream_dir = tmp_path / "changes"
-    stream_dir.mkdir()
-
-    def msg(block_num, table, pk, ordinal, op, fields):
-        return json.dumps(
-            {
-                "block_num": block_num,
-                "block_id": f"0x{block_num:x}",
-                "table_changes": [
-                    {
-                        "table": table,
-                        "pk": pk,
-                        "ordinal": ordinal,
-                        "operation": op,
-                        "fields": [
-                            {"name": n, "new_value": v, "old_value": None}
-                            for n, v in fields.items()
-                        ],
-                    }
-                ],
-            }
-        )
-
-    f1 = stream_dir / "a_b1.jsonl"
-    f1.write_text(msg(1, "t", "k1", 1, "CREATE", {"x": "1", "y": "a"}))
-    now = time.time()
-    os.utime(f1, (now - 60, now - 60))
-    f2 = stream_dir / "b_b2.jsonl"
-    f2.write_text(msg(2, "t", "k1", 1, "UPDATE", {"x": "2"}))
-    os.utime(f2, (now, now))
-
-    prior = spark.conf.get("spark.sql.streaming.stateStore.providerClass", None)
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
-    try:
-        raw = (
-            spark.readStream.schema("value string")
-            .option("maxFilesPerTrigger", "1")
-            .text(str(stream_dir))
-        )
-        pending = streaming_pending_ops_tws(decode_database_changes(raw, "value"))
-        query = (
-            pending.writeStream.format("memory")
-            .queryName("pending_ops_tws_test")
-            .outputMode("update")
-            .option("checkpointLocation", str(tmp_path / "ckpt_tws"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        query.awaitTermination(300)
-    finally:
-        if prior is not None:
-            spark.conf.set("spark.sql.streaming.stateStore.providerClass", prior)
-        else:
-            spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-
-    emitted = spark.table("pending_ops_tws_test").collect()
-    k1_states = [r for r in emitted if r["pk"] == "k1"]
-    assert len(k1_states) == 2
-    assert k1_states[-1]["op"] == "CREATE"
-    assert json.loads(k1_states[-1]["fields_json"]) == {
-        "x": "2", "y": "a", "__pk__": "k1",
-    }

@@ -164,8 +164,8 @@ def test_unknown_table_fails_stream_batch(spark, tmp_path, block_meta_catalog, c
 
 def test_merge_violation_fails_stream_batch(spark, tmp_path, block_meta_catalog, changes_df):
     """A semantically invalid window (duplicate CREATE per pk) must fail
-    the batch — the inline guard raises from inside the commit write,
-    BEFORE the manifest swap, so no state is committed."""
+    the batch — the guarded fold raises when the epoch materializes its
+    window, before any file is written, so no state is committed."""
     pipe = _pipeline(spark, block_meta_catalog, tmp_path)
     batch = changes_df(
         [

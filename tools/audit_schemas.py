@@ -9,9 +9,10 @@ MapType, or StructType.  Exit code 1 if any found.
 
 from __future__ import annotations
 
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import SparkSession
 from pyspark.sql.types import ArrayType, MapType, StructType

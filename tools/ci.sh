@@ -32,6 +32,15 @@ if grep -rnE --include='*.py' --exclude=pipeline.py 'os\.(replace|rename)|tempfi
 fi
 echo "no file swaps outside pipeline.py"
 
+echo "== tests and tools import their own checkout =="
+# A fixed absolute path first on sys.path makes a copy of the repository
+# test or run another checkout's package instead of its own.
+if grep -rnE --include='*.py' "sys\.path\.insert\(0, *[\"']/" tests/ tools/; then
+  echo "FAIL: a test or tool puts a fixed checkout path on sys.path (derive it from __file__)"
+  exit 1
+fi
+echo "no fixed checkout paths"
+
 echo "== schema audit =="
 python tools/audit_schemas.py
 

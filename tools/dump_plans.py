@@ -1,7 +1,7 @@
 """Generate PLANS.md: formatted physical plans of the flagship queries
 with the plan properties that matter at 100 TB, checked mechanically.
 
-Usage: python tools/dump_plans.py [sf_dir]   (writes /root/repo/PLANS.md)
+Usage: python tools/dump_plans.py [sf_dir]   (writes PLANS.md at the repository root)
 
 For each selected query this records:
 * the `.explain("formatted")` output (truncated to the interesting part),
@@ -13,10 +13,12 @@ For each selected query this records:
 
 from __future__ import annotations
 
+import os
 import re
 import sys
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 #: (query, why this plan shape is the one you want at scale)
 SHOWCASE = [
@@ -552,7 +554,7 @@ def main() -> None:
             out.append(f"... ({len(tree) - 40} more lines)")
         out.append("```")
         out.append("")
-    with open("/root/repo/PLANS.md", "w") as fh:
+    with open(os.path.join(ROOT, "PLANS.md"), "w") as fh:
         fh.write("\n".join(out))
     print("wrote PLANS.md")
 

@@ -19,9 +19,10 @@ Usage: python tools/oracle_type_audit.py [--json out.json]
 from __future__ import annotations
 
 import re
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 BANNED = ("HUGEINT", "UHUGEINT", "TIMESTAMP WITH TIME ZONE")
 
