@@ -46,5 +46,16 @@ class ManifestConflictError(EngineError):
     was committed; re-plan from the current manifest and retry."""
 
 
+class ClickHouseHTTPError(EngineError):
+    """ClickHouse answered a posted statement with an HTTP error.
+    ``body`` is the start of the response, where ClickHouse puts its
+    exception text."""
+
+    def __init__(self, status: int, body: str):
+        self.status = status
+        self.body = body
+        super().__init__(f"ClickHouse answered HTTP {status}: {body}")
+
+
 class EnvVarError(EngineError):
     """An environment variable holds a value the engine cannot use."""

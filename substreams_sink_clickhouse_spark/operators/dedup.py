@@ -206,13 +206,17 @@ def _pair_rows(buckets: DataFrame, arr: str) -> DataFrame:
     explode.  The Generate pipeline streams pairs through the same
     WholeStageCodegen stage with zero per-pair allocation.
 
-    Value-identical multiset to the old expansion (and to an
+    Precondition: ``arr`` is sorted ascending (every caller passes a
+    ``sort_array``).  On a sorted array the output is the same
+    multiset as the old positional expansion (and as an
     ``a.id < b.id`` self-join): for values ``x < y`` with
     multiplicities ``a``/``b`` in the array, both emit the pair
     ``a*b`` times and neither ever pairs equal values, so every
     consumer (``distinct`` / ``groupBy`` count) sees the same input.
-    The filter is on VALUES, not positions, so the array's sort order
-    does not matter here (cap star semantics below do rely on it)."""
+    On an unsorted array the two differ: the filter is on values, not
+    positions, so ``[5, 3]`` yields ``(3, 5)`` here and nothing from
+    the positional expansion (the cap star semantics below rely on
+    the order too)."""
     return (
         buckets.select("*", F.explode(arr).alias("x"))
         .select("*", F.explode(arr).alias("y"))

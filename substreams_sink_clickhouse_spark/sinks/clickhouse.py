@@ -25,6 +25,18 @@ db/flush.go:33-45):
 
 Statement *generation* is pure and unit-testable; *execution* needs a
 reachable ClickHouse and degrades to returning the statements.
+
+Delivery is at-least-once, as in the reference, which re-sends from its
+stored cursor: the ingest pipeline posts an epoch's statements before
+it commits the epoch and the cursor statement after.  A failed post
+leaves the epoch uncommitted, so the stream's replay posts it again; a
+ReplacingMergeTree target absorbs the INSERT rows a replay repeats.
+``execute_statement`` raises ``ClickHouseHTTPError`` (HTTP status plus
+the start of ClickHouse's exception text) for a rejected statement.
+``write_batch`` posts from Spark tasks, so there the caller gets
+Spark's job error, whose message holds that error's text but not its
+type; only the cursor statement, posted from the driver, raises
+``ClickHouseHTTPError`` itself.
 """
 
 from __future__ import annotations
@@ -38,12 +50,17 @@ from pyspark.sql import types as T
 
 from substreams_sink_clickhouse_spark.catalog import Catalog, TableInfo
 from substreams_sink_clickhouse_spark.config import ClickHouseDSN
+from substreams_sink_clickhouse_spark.errors import ClickHouseHTTPError
 from substreams_sink_clickhouse_spark.functions.escaping import (
     escape_identifier,
     escape_value,
 )
 
 _UNIX_RE = re.compile(r"^\d+$")
+
+#: Characters of an error response kept in ``ClickHouseHTTPError``:
+#: ClickHouse puts its exception text at the start of the body.
+ERROR_BODY_CHARS = 500
 
 
 def literal_for(value: str | None, dtype: T.DataType) -> str:
@@ -162,6 +179,9 @@ class ClickHouseHTTPSink:
         self.timeout_s = timeout_s
 
     def execute_statement(self, sql: str) -> None:
+        """POST one statement; an HTTP error status raises
+        ``ClickHouseHTTPError`` with the start of ClickHouse's answer."""
+        import urllib.error
         import urllib.parse
         import urllib.request
 
@@ -171,8 +191,12 @@ class ClickHouseHTTPSink:
         req = urllib.request.Request(
             f"{self.dsn.http_url}/?{params}", data=sql.encode(), method="POST"
         )
-        with urllib.request.urlopen(req, timeout=self.timeout_s) as resp:
-            resp.read()
+        try:
+            with urllib.request.urlopen(req, timeout=self.timeout_s) as resp:
+                resp.read()
+        except urllib.error.HTTPError as exc:
+            body = exc.read().decode("utf-8", "replace")[:ERROR_BODY_CHARS]
+            raise ClickHouseHTTPError(exc.code, body) from exc
 
     def write_batch(self, reduced: DataFrame, epoch_id: int = 0) -> None:
         """foreachBatch-compatible: generate + execute per partition on

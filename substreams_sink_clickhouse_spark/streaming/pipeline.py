@@ -27,6 +27,20 @@ effectively-once is achieved the way Spark sinks do it:
   at-least-once file source — same net semantics as the reference's
   transactional cursor).
 
+An epoch's Spark actions that only read the cached window run side by
+side on worker threads, which inherit the caller's job group: the wire
+sink's posts (``ClickHouseHTTPSink.write_batch``) start once the window
+has passed its checks, and the commit writes all of the epoch's files at
+once.  The swap waits for every write and for the posts, so a failed
+post leaves the epoch uncommitted and the replay posts it again:
+delivery to ClickHouse is at-least-once, as in the reference, which
+re-sends from its stored cursor.  The cursor statement is posted after
+the swap.  Workers run actions only (a write also builds its own
+bucketing projection).  Every cache and conf change is made on the
+calling thread, the window's conf-scoped ``_cache`` before any worker
+starts, and every worker has returned before the epoch releases its
+caches.
+
 Every manifest edit — epoch commit, maintenance, vacuum, reorg
 rollback, cursor edit — goes through ``TableStateStore.edit_manifest``:
 read, edit and swap under one ``flock`` on ``<warehouse>/manifest.lock``.
@@ -60,9 +74,11 @@ import shutil
 import tempfile
 import time
 import uuid
+from concurrent.futures import ThreadPoolExecutor
 from contextlib import contextmanager
 from typing import Callable, NamedTuple
 
+from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -223,6 +239,15 @@ class _Staged(NamedTuple):
     paths: list[str]
 
 
+class _Pending(NamedTuple):
+    """One table's commit, planned but not written: the
+    ``_write_buckets`` argument tuples of its files, and ``finish``,
+    which builds the ``_Staged`` entry from their results, in order."""
+
+    writes: list[tuple]
+    finish: Callable[[list[dict]], _Staged]
+
+
 def _entry_state(entry: dict | None):
     """What a staged commit depends on in a table entry: everything
     but its history, which vacuum may prune meanwhile."""
@@ -251,9 +276,10 @@ class TableStateStore:
     unreferenced bucket dirs) works unchanged on the bucketed layout.
 
     One write path: every commit — epoch (rewrite or sidecar) and
-    maintenance (OPTIMIZE / TTL / UPDATE / REBUCKET) — stages each
-    table through ``_stage_table``, which writes bucket directories
-    with ``_write_buckets``, then applies it with ``_commit_staged``
+    maintenance (OPTIMIZE / TTL / UPDATE / REBUCKET) — plans each
+    table's files with ``_plan_table``, writes them with
+    ``_write_staged`` (one ``_write_buckets`` call per file, all of a
+    commit's files side by side), then applies it with ``_commit_staged``
     inside ``edit_manifest``, the one manifest writer; reorg rollback
     builds its entry with ``_table_entry`` too.
 
@@ -366,7 +392,7 @@ class TableStateStore:
 
     # --------------------------------------------------- write path
 
-    def _stage_table(
+    def _plan_table(
         self,
         prior: dict | None,
         name: str,
@@ -378,46 +404,77 @@ class TableStateStore:
         sort=None,
         new_n_buckets: int | None = None,
         window_ops: int = 0,
-    ) -> _Staged:
-        """Write one table's new bucket files under ``<table>/<tag>``
-        on top of its ``prior`` manifest entry, and return the staged
-        entry for ``_commit_staged``.  Every epoch and maintenance
-        commit goes through here.  ``rows`` replace the affected
-        buckets' state, one directory per bucket, or, with ``mask``,
-        are appended to them as a sidecar layer while the masked
-        (src, pk) rows join each bucket's deletion vector: one shared
-        delta file and one shared dv file for the table, written from
-        at most one task per ``SIDECAR_WRITE_BLOCK_OPS`` of the
-        window's ``window_ops``.  With ``new_n_buckets`` the bucket map is
-        rebuilt under that modulus."""
+    ) -> _Pending:
+        """Plan one table's new bucket files under ``<table>/<tag>`` on
+        top of its ``prior`` manifest entry; ``_write_staged`` writes
+        them and builds the staged entry for ``_commit_staged``.  Every
+        epoch and maintenance commit goes through here.  ``rows``
+        replace the affected buckets' state, one directory per bucket,
+        or, with ``mask``, are appended to them as a sidecar layer while
+        the masked (src, pk) rows join each bucket's deletion vector:
+        one shared delta file and one shared dv file for the table,
+        independent of each other, written from at most one task per
+        ``SIDECAR_WRITE_BLOCK_OPS`` of the window's ``window_ops``.
+        With ``new_n_buckets`` the bucket map is rebuilt under that
+        modulus."""
         n_b = new_n_buckets or self._entry_n_buckets(prior)
         bmap = dict(prior["buckets"]) if prior and not new_n_buckets else {}
         vdir = os.path.join(self.warehouse_dir, name, tag)
         key = self.catalog.get(name).primary_key
         if mask is None:
-            written = self._write_buckets(rows, vdir, key, n_b, len(affected), sort)
-            for b in affected:
-                # a bucket whose rows were all deleted writes no dir
-                bmap[str(b)] = os.path.join(vdir, f"__b={b}") if b in written else None
-            return _Staged(name, prior, epoch, bmap, n_b, [vdir])
+
+            def finish(results: list[dict]) -> _Staged:
+                [written] = results
+                for b in affected:
+                    # a bucket whose rows were all deleted writes no dir
+                    bmap[str(b)] = os.path.join(vdir, f"__b={b}") if b in written else None
+                return _Staged(name, prior, epoch, bmap, n_b, [vdir])
+
+            return _Pending([(rows, vdir, key, n_b, len(affected), sort)], finish)
         n_tasks = max(1, -(-window_ops // SIDECAR_WRITE_BLOCK_OPS))
-        written = self._write_buckets(rows, vdir, key, n_b, n_tasks, shared=True)
         # deletion vectors: new masks ∪ the affected buckets' existing
         # dv rows (ONE current dv per bucket)
         mask = _union([mask, *self._scans(_DV_SCHEMA, self._dv_refs(bmap, affected))])
         dvdir = os.path.join(self.warehouse_dir, name, f"dv{epoch}")
-        dv_written = self._write_buckets(mask, dvdir, "pk", n_b, n_tasks, shared=True)
-        for b in affected:
-            old = bmap.get(str(b))
-            layers = self._entry_layers(old)
-            if b in written:
-                layers.append({"epoch": epoch, "path": vdir, "shared": True, "rows": written[b]})
-            if b in dv_written:
-                dv = {"dv": dvdir, "dv_shared": True, "masked": dv_written[b]}
-            else:
-                dv = {k: old[k] for k in _DV_KEYS if k in old} if self._entry_dv(old) else {}
-            bmap[str(b)] = {"files": layers, "dv": None, **dv} if layers or dv else None
-        return _Staged(name, prior, epoch, bmap, n_b, [vdir, dvdir])
+
+        def finish_sidecar(results: list[dict]) -> _Staged:
+            written, dv_written = results
+            for b in affected:
+                old = bmap.get(str(b))
+                layers = self._entry_layers(old)
+                if b in written:
+                    layers.append({"epoch": epoch, "path": vdir, "shared": True, "rows": written[b]})
+                if b in dv_written:
+                    dv = {"dv": dvdir, "dv_shared": True, "masked": dv_written[b]}
+                else:
+                    dv = {k: old[k] for k in _DV_KEYS if k in old} if self._entry_dv(old) else {}
+                bmap[str(b)] = {"files": layers, "dv": None, **dv} if layers or dv else None
+            return _Staged(name, prior, epoch, bmap, n_b, [vdir, dvdir])
+
+        return _Pending(
+            [
+                (rows, vdir, key, n_b, n_tasks, None, True),
+                (mask, dvdir, "pk", n_b, n_tasks, None, True),
+            ],
+            finish_sidecar,
+        )
+
+    def _write_staged(self, pending: list[_Pending]) -> list[_Staged]:
+        """Write every planned file of ``pending`` at once, one
+        ``_write_buckets`` call each, at most ``defaultParallelism`` at
+        a time, and return the tables' staged entries.  Each write runs
+        on a worker thread that takes the calling thread's Spark job
+        group, tags and local properties (so a stream stop cancels its
+        jobs too).  Every write has returned before this does, and the
+        first failed one's error is then raised as it was."""
+        calls = [
+            functools.partial(self._write_buckets, *args) for p in pending for args in p.writes
+        ]
+        limit = max(1, min(len(calls), self.spark.sparkContext.defaultParallelism))
+        with ThreadPoolExecutor(max_workers=limit) as pool:
+            futures = [pool.submit(inheritable_thread_target(self.spark)(c)) for c in calls]
+        done = (f.result() for f in futures)
+        return [p.finish([next(done) for _ in p.writes]) for p in pending]
 
     def _commit_staged(self, manifest: dict, staged: _Staged) -> None:
         """Apply a staged table entry onto ``manifest``, as read inside
@@ -716,10 +773,19 @@ class TableStateStore:
         cursor: Cursor | None,
         sidecar_states: dict[str, tuple[DataFrame, DataFrame, list[int], int]] | None = None,
         base: dict | None = None,
+        before_swap: Callable[[], object] | None = None,
     ) -> None:
         """Write each affected bucket's new state, then commit the
         epoch with one manifest swap: its table entries, its applied
-        mark, its head block and the cursor row.  ``new_states`` maps
+        mark, its head block and the cursor row.  Every file of the
+        epoch is planned on the calling thread and then written at
+        once — each sidecar table's delta and dv files, each rewritten
+        table's and rollup's buckets — at most ``defaultParallelism``
+        at a time (``_write_staged``).  The swap waits for all of them
+        and then for ``before_swap`` (the pipeline's wire sink), and is
+        skipped if any of them raised.  The write lock is held shared
+        throughout, so a slow ``before_swap`` holds ``vacuum`` off
+        too.  ``new_states`` maps
         table -> (bucket-subset state DF, affected bucket ids) — the
         full-rewrite path.  ``sidecar_states`` maps table -> (delta
         rows DF, (src, pk) mask DF, affected bucket ids, window op
@@ -737,16 +803,18 @@ class TableStateStore:
             base = self.read_manifest()["tables"]
         tag = f"v{epoch_id}"
         with self._write_lock():
-            staged = [
-                self._stage_table(
+            staged = self._write_staged([
+                self._plan_table(
                     base.get(name), name, delta, affected, epoch_id, tag, mask=mask,
                     window_ops=n_ops,
                 )
                 for name, (delta, mask, affected, n_ops) in (sidecar_states or {}).items()
             ] + [
-                self._stage_table(base.get(name), name, df, affected, epoch_id, tag)
+                self._plan_table(base.get(name), name, df, affected, epoch_id, tag)
                 for name, (df, affected) in new_states.items()
-            ]
+            ])
+            if before_swap is not None:
+                before_swap()
             with self.edit_manifest() as manifest:
                 for s in staged:
                     self._commit_staged(manifest, s)
@@ -770,7 +838,9 @@ class TableStateStore:
         deleted, or, while some of its bucket directories are still
         referenced, the rest of them.  Waits for the commits in flight
         to swap, and holds new ones off until it is done (see
-        ``_write_lock``).  Returns the deleted paths.
+        ``_write_lock``); a commit in flight swaps only after its
+        ``before_swap``, so vacuum also waits for the wire sink's
+        posts.  Returns the deleted paths.
         Retention bounds storage regardless of how many epochs have
         run."""
         deleted: list[str] = []
@@ -852,10 +922,10 @@ class TableStateStore:
         # from overwriting the files of the one that wins the swap
         seq = int(self.read_manifest().get("mutation_seq", 0)) + 1
         with self._write_lock():
-            staged = self._stage_table(
+            [staged] = self._write_staged([self._plan_table(
                 entry, name, df, affected, entry["epoch"], f"{kind}{seq}-{uuid.uuid4().hex[:8]}",
                 sort=sort, new_n_buckets=new_n_buckets,
-            )
+            )])
             with self.edit_manifest() as manifest:
                 self._commit_staged(manifest, staged)
                 manifest["mutation_seq"] = int(manifest.get("mutation_seq", 0)) + 1
@@ -1160,9 +1230,10 @@ class ChangesIngestPipeline:
         self.on_decode_error = on_decode_error
         self.dead_letter_dir = dead_letter_dir
         #: Optional wire-parity sink: when set (a
-        #: sinks.clickhouse.ClickHouseHTTPSink), every committed
-        #: epoch's reduced ops are also emitted as the reference's
-        #: three SQL statement shapes to a live ClickHouse.
+        #: sinks.clickhouse.ClickHouseHTTPSink), every epoch's reduced
+        #: ops are also posted as the reference's three SQL statement
+        #: shapes to a live ClickHouse before the epoch commits, and its
+        #: cursor statement after.
         self.clickhouse_sink = clickhouse_sink
         #: table name -> attached IncrementalAggregate rollups,
         #: updated with each epoch's CREATE rows (ClickHouse
@@ -1201,7 +1272,17 @@ class ChangesIngestPipeline:
         once and a merge-rule violation raises there, before anything
         is written.  Every other consumer (each table's apply, the
         rollups and the wire sink) reads that one frame, which the
-        epoch releases on its way out."""
+        epoch releases on its way out.
+
+        Once the window has passed its checks, the wire sink posts it
+        from a worker thread while this thread plans each table's
+        apply and ``commit_epoch`` writes the epoch's files; the swap
+        waits for the posts, and the cursor statement follows the swap.
+        A failed post or write raises here with the epoch uncommitted,
+        after every worker has returned.  The posts run in Spark tasks,
+        so a statement ClickHouse rejects raises Spark's job error,
+        whose message holds the ``ClickHouseHTTPError`` text; a rejected
+        cursor statement raises ``ClickHouseHTTPError`` itself."""
         t0 = time.time()
         phases = self.stats.phase_seconds
 
@@ -1229,6 +1310,7 @@ class ChangesIngestPipeline:
         )
         live = _cache(guard_merge_errors(reduce_changes(changes, self.catalog.primary_keys())))
         cached = [live]
+        side = ThreadPoolExecutor(max_workers=1)  # the wire sink's worker
         try:
             # ONE summary per (table, pk-bucket) of the reduced ops
             # yields the affected buckets, each table's op count and the
@@ -1245,6 +1327,16 @@ class ChangesIngestPipeline:
             unknown = sorted({r["table"] for r in summary} - set(known))
             if unknown:
                 raise UnknownTableError(unknown[0], known)
+            posted = None
+            if self.clickhouse_sink is not None:
+                # wire parity: the window as the reference's SQL
+                # (INSERT / ALTER UPDATE / DELETE, db/flush.go:12-63),
+                # posted beside the planning and the writes; the swap
+                # waits for it
+                posted = side.submit(
+                    inheritable_thread_target(self.spark)(self.clickhouse_sink.write_batch),
+                    live, epoch_id,
+                )
             # the reconcile then scans O(affected buckets) of each
             # table and the commit rewrites the same subset
             affected: dict[str, list[int]] = {}
@@ -1300,6 +1392,15 @@ class ChangesIngestPipeline:
                     target = self.state.bucket_state(name, buckets, with_src=True)
                     delta, mask, matched = apply_table_ops_delta(target, ops, info)
                     cached.append(matched)
+                    # fill its cache now, on this thread: toRdd() has
+                    # AQE materialize the cached plan's query stage,
+                    # which runs the one job that scans the state and
+                    # fills every partition of the cache (no action on
+                    # top).  Left unfilled, the delta and dv writes
+                    # would each run that job beside the other.
+                    # test_the_epochs_caches_are_filled_before_any_write_starts
+                    # pins it.
+                    matched._jdf.queryExecution().toRdd()
                     sidecar_states[name] = (delta, mask, buckets, window_ops[name])
                 else:
                     target = self.state.bucket_state(name, buckets)
@@ -1317,19 +1418,18 @@ class ChangesIngestPipeline:
             self.state.commit_epoch(
                 epoch_id, new_states, cursor,
                 sidecar_states=sidecar_states or None, base=manifest_tables,
+                before_swap=posted.result if posted is not None else None,
             )
             tp = mark("commit", tp)
-            if self.clickhouse_sink is not None:
-                # wire parity: emit the same window as ClickHouse SQL
-                # (INSERT / ALTER UPDATE / DELETE + cursor update,
-                # /root/reference/db/flush.go:12-63)
-                self.clickhouse_sink.write_batch(live, epoch_id)
+            if posted is not None:
+                # the reference's cursor update ends the flush
                 self.clickhouse_sink.execute_statement(
                     cursor_update_statement(
                         cursor.id, cursor.cursor, cursor.block_num, cursor.block_id
                     )
                 )
         finally:
+            side.shutdown()  # waits: no worker outlives the epoch
             for df in cached:
                 df.unpersist()
         # the reduced ops, as the reference counts its flushed entries
@@ -1469,8 +1569,10 @@ class ChangesIngestPipeline:
         * the cursor row is part of that same manifest swap, so it
           advances exactly when the epoch's state does.
 
-        Together: no loss, no duplication, across any number of
-        restarts.  Returns the number of restarts performed.  Raises
+        Together: no loss, no duplication of table state, across any
+        number of restarts (a wire sink's posts are at-least-once: an
+        epoch that failed before its swap posts again on replay).
+        Returns the number of restarts performed.  Raises
         the final error when ``max_restarts`` is exhausted or the
         deadline passes.
         """

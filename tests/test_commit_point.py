@@ -5,11 +5,15 @@ state, cursor, rollup and history together.
 
 Crash points and concurrent writers are injected by wrapping the
 store's own steps (``_write_buckets``, ``os.replace``) around
-``process_batch`` on in-memory change frames."""
+``process_batch`` on in-memory change frames.  The wire sink posts to
+a loopback ClickHouse that records every statement and can reject
+one."""
 
 import os
 import sys
 import threading
+import time
+from http.server import BaseHTTPRequestHandler, HTTPServer
 
 import pytest
 from pyspark.sql import functions as F
@@ -18,6 +22,7 @@ from pyspark.sql import types as T
 from substreams_sink_clickhouse_spark import errors
 from substreams_sink_clickhouse_spark.catalog import CURSORS_SCHEMA, Catalog, TableInfo
 from substreams_sink_clickhouse_spark.functions.localdata import local_df
+from substreams_sink_clickhouse_spark.sinks.clickhouse import ClickHouseHTTPSink
 from substreams_sink_clickhouse_spark.streaming.cursors import Cursor, CursorStore
 from substreams_sink_clickhouse_spark.streaming.mataggs import IncrementalAggregate
 from substreams_sink_clickhouse_spark.streaming.pipeline import (
@@ -137,18 +142,17 @@ def uninterrupted(spark, tmp_path_factory):
     return _outcome(pipe)
 
 
-def _crash_after_bucket_write(n):
-    """``_write_buckets`` that raises once its ``n``-th call has
-    written: 1 = the epoch's delta, 2 = its deletion vector, 3 = the
-    rollup's partials."""
+def _crash_after_bucket_write(table, name):
+    """``_write_buckets`` that raises once it has written
+    ``<table>/<name>``: ``kv/v1`` is epoch 1's delta, ``kv/dv1`` its
+    deletion vector and ``kv_rollup/v1`` the rollup's partials.  The
+    epoch writes them side by side, so their order is not fixed."""
     real = TableStateStore._write_buckets
-    calls = []
 
-    def write(self, *args, **kwargs):
-        written = real(self, *args, **kwargs)
-        calls.append(1)
-        if len(calls) == n:
-            raise Crash(f"after bucket write {n}")
+    def write(self, df, vdir, *args, **kwargs):
+        written = real(self, df, vdir, *args, **kwargs)
+        if (os.path.basename(os.path.dirname(vdir)), os.path.basename(vdir)) == (table, name):
+            raise Crash(f"after writing {table}/{name}")
         return written
 
     return TableStateStore, "_write_buckets", write
@@ -170,9 +174,9 @@ def _crash_at_swap(after):
 
 
 CRASH_POINTS = {
-    "after_delta_write": (lambda: _crash_after_bucket_write(1), False),
-    "after_dv_write": (lambda: _crash_after_bucket_write(2), False),
-    "after_rollup_stage": (lambda: _crash_after_bucket_write(3), False),
+    "after_delta_write": (lambda: _crash_after_bucket_write("kv", "v1"), False),
+    "after_dv_write": (lambda: _crash_after_bucket_write("kv", "dv1"), False),
+    "after_rollup_stage": (lambda: _crash_after_bucket_write("kv_rollup", "v1"), False),
     "in_swap_before_replace": (lambda: _crash_at_swap(after=False), False),
     "right_after_swap": (lambda: _crash_at_swap(after=True), True),
 }
@@ -309,19 +313,243 @@ def test_flushed_entries_count_the_reduced_ops(spark, tmp_path, write_mode):
 
 
 @pytest.mark.parametrize("outcome", ["committed", "merge_violation", "crash_in_commit"])
-def test_epoch_releases_every_cache_it_made(spark, tmp_path, monkeypatch, outcome):
+def test_epoch_releases_every_cache_it_made(spark, tmp_path, monkeypatch, clickhouse, outcome):
+    """...and every thread: the wire sink's worker and the commit's
+    writers have all returned when the epoch does."""
     pipe = _pipe(spark, tmp_path / "wh")
+    pipe.clickhouse_sink = ClickHouseHTTPSink(clickhouse.dsn, pipe.catalog)
     pipe.process_batch(_window(spark, 1, EPOCH0), 0)
     window = _window(spark, 2, BAD_EPOCH1 if outcome == "merge_violation" else EPOCH1)
     if outcome == "crash_in_commit":
-        monkeypatch.setattr(*_crash_after_bucket_write(1))
-    before = _persistent_rdds(spark)
+        monkeypatch.setattr(*_crash_after_bucket_write("kv", "v1"))
+    before = _persistent_rdds(spark), threading.active_count()
     if outcome == "committed":
         pipe.process_batch(window, 1)
     else:
         with pytest.raises(Exception):
             pipe.process_batch(window, 1)
-    assert _persistent_rdds(spark) == before
+    assert (_persistent_rdds(spark), threading.active_count()) == before
+
+
+# ----------------------------------------------------- the wire sink
+
+#: what ClickHouse answers a statement it rejects
+CLICKHOUSE_ERROR = "Code: 62. DB::Exception: Syntax error: failed at position 1. " + "x" * 600
+
+
+class LoopbackClickHouse:
+    """ClickHouse's HTTP interface on a loopback port: records every
+    posted statement in arrival order, and answers statement number
+    ``fail_at`` (counting from 1) with HTTP 500 and ClickHouse's
+    error text."""
+
+    def __init__(self):
+        self.statements: list[str] = []
+        self.fail_at = None
+        lock = threading.Lock()
+        ch = self
+
+        class Handler(BaseHTTPRequestHandler):
+            def do_POST(self):  # noqa: N802 (http.server naming)
+                sql = self.rfile.read(int(self.headers["Content-Length"])).decode()
+                with lock:
+                    ch.statements.append(sql)
+                    failed = len(ch.statements) == ch.fail_at
+                body = CLICKHOUSE_ERROR.encode() if failed else b""
+                self.send_response(500 if failed else 200)
+                self.send_header("Content-Length", str(len(body)))
+                self.end_headers()
+                self.wfile.write(body)
+
+            def log_message(self, *args):
+                pass
+
+        class Server(HTTPServer):
+            request_queue_size = 16  # every executor core may post at once
+
+        self.server = Server(("127.0.0.1", 0), Handler)
+        self.dsn = f"clickhouse://default:@127.0.0.1:{self.server.server_address[1]}/default"
+        self.thread = threading.Thread(target=self.server.serve_forever, daemon=True)
+        self.thread.start()
+
+    def close(self):
+        self.server.shutdown()
+        self.server.server_close()
+        self.thread.join(timeout=10)
+        assert not self.thread.is_alive()
+
+
+@pytest.fixture()
+def clickhouse():
+    server = LoopbackClickHouse()
+    yield server
+    server.close()
+
+
+def _is_cursor(sql):
+    return sql.startswith('ALTER TABLE "cursors"')
+
+
+def test_a_failed_post_names_clickhouses_error(clickhouse):
+    clickhouse.fail_at = 1
+    sink = ClickHouseHTTPSink(clickhouse.dsn, Catalog())
+    with pytest.raises(errors.ClickHouseHTTPError) as raised:
+        sink.execute_statement("SELEC 1")
+    assert raised.value.status == 500
+    assert raised.value.body == CLICKHOUSE_ERROR[:500]
+    assert "HTTP 500: Code: 62. DB::Exception: Syntax error" in str(raised.value)
+
+
+def test_a_failed_post_leaves_the_epoch_uncommitted_and_the_replay_posts_it(
+    spark, tmp_path, clickhouse, uninterrupted
+):
+    """The swap waits for the posts: an epoch whose post fails is not
+    applied and posts no cursor statement, so the stream's replay
+    posts it again (at-least-once delivery) and commits it."""
+    pipe = _pipe(spark, tmp_path / "wh")
+    pipe.clickhouse_sink = ClickHouseHTTPSink(clickhouse.dsn, pipe.catalog)
+    pipe.process_batch(_window(spark, 1, EPOCH0), 0)
+    posted = len(clickhouse.statements)
+    clickhouse.fail_at = posted + 1
+    epoch1 = _window(spark, 2, EPOCH1)
+    # the epoch's statements are posted from Spark tasks: Spark's task
+    # error carries the ClickHouseHTTPError's text, not its type
+    with pytest.raises(Exception, match="ClickHouse answered HTTP 500: Code: 62. DB::Exception"):
+        pipe.process_batch(epoch1, 1)
+    assert not pipe.state.epoch_applied(1)
+    assert _block(pipe) == 1
+    assert not any(_is_cursor(s) for s in clickhouse.statements[posted:])
+
+    clickhouse.fail_at = None
+    replayed = len(clickhouse.statements)
+    pipe.process_batch(epoch1, 1)
+    assert _outcome(pipe) == uninterrupted
+    kinds = sorted(s.split(" ")[0] for s in clickhouse.statements[replayed:-1])
+    assert kinds == ["ALTER", "DELETE", "INSERT"]  # k1's UPDATE, k2's DELETE, k8's CREATE
+    assert _is_cursor(clickhouse.statements[-1])
+
+
+def test_the_cursor_statement_ends_each_epoch(spark, tmp_path, clickhouse):
+    pipe = _pipe(spark, tmp_path / "wh")
+    pipe.clickhouse_sink = ClickHouseHTTPSink(clickhouse.dsn, pipe.catalog)
+    for epoch, (block, ops) in enumerate([(1, EPOCH0), (2, EPOCH1)]):
+        posted = len(clickhouse.statements)
+        pipe.process_batch(_window(spark, block, ops), epoch)
+        cursors = [i for i, s in enumerate(clickhouse.statements[posted:]) if _is_cursor(s)]
+        assert cursors == [len(clickhouse.statements) - posted - 1]
+
+
+def test_a_crash_in_one_write_raises_after_every_worker_returned(
+    spark, tmp_path, monkeypatch, clickhouse
+):
+    """The delta write raises at once while the deletion-vector write
+    and the sink's posts are still running: ``process_batch`` raises
+    the crash only after both have returned, and leaves no thread and
+    no cache behind."""
+    finished = []
+
+    class SlowSink(ClickHouseHTTPSink):
+        def write_batch(self, reduced, epoch_id=0):
+            time.sleep(1)
+            super().write_batch(reduced, epoch_id)
+            finished.append("sink")
+
+    pipe = _pipe(spark, tmp_path / "wh")
+    pipe.clickhouse_sink = SlowSink(clickhouse.dsn, pipe.catalog)
+    pipe.process_batch(_window(spark, 1, EPOCH0), 0)
+    finished.clear()
+    real = TableStateStore._write_buckets
+
+    def write(self, df, vdir, *args, **kwargs):
+        name = os.path.basename(vdir)
+        if name == "v1" and os.path.basename(os.path.dirname(vdir)) == "kv":
+            raise Crash("the delta write")
+        if name == "dv1":
+            time.sleep(1)
+        written = real(self, df, vdir, *args, **kwargs)
+        finished.append(name)
+        return written
+
+    monkeypatch.setattr(TableStateStore, "_write_buckets", write)
+    before = _persistent_rdds(spark), threading.active_count()
+    with pytest.raises(Crash):
+        pipe.process_batch(_window(spark, 2, EPOCH1), 1)
+    assert sorted(finished) == ["dv1", "sink", "v1"]  # the rollup's v1, the dv, the posts
+    assert (_persistent_rdds(spark), threading.active_count()) == before
+    assert not pipe.state.epoch_applied(1)
+
+
+def test_every_job_of_the_epoch_runs_in_the_callers_job_group(
+    spark, tmp_path, monkeypatch, clickhouse
+):
+    """Workers take the calling thread's job group, so cancelling the
+    group (as a stream stop does) reaches their jobs too: the writes
+    and the posts run in it, and no job of the epoch runs outside it."""
+    sc = spark.sparkContext
+    groups = {}
+
+    class GroupSink(ClickHouseHTTPSink):
+        def write_batch(self, reduced, epoch_id=0):
+            groups["sink"] = reduced.sparkSession.sparkContext.getLocalProperty("spark.jobGroup.id")
+            super().write_batch(reduced, epoch_id)
+
+    pipe = _pipe(spark, tmp_path / "wh")
+    pipe.clickhouse_sink = GroupSink(clickhouse.dsn, pipe.catalog)
+    pipe.process_batch(_window(spark, 1, EPOCH0), 0)
+    real = TableStateStore._write_buckets
+
+    def write(self, df, vdir, *args, **kwargs):
+        groups[os.path.relpath(vdir, self.warehouse_dir)] = sc.getLocalProperty("spark.jobGroup.id")
+        return real(self, df, vdir, *args, **kwargs)
+
+    monkeypatch.setattr(TableStateStore, "_write_buckets", write)
+    tracker = sc.statusTracker()
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    ungrouped = set(tracker.getJobIdsForGroup())
+    sc.setJobGroup("epoch-1", "the epoch under test")
+    try:
+        pipe.process_batch(_window(spark, 2, EPOCH1), 1)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    assert groups == {
+        "sink": "epoch-1",
+        os.path.join("kv", "v1"): "epoch-1",
+        os.path.join("kv", "dv1"): "epoch-1",
+        os.path.join("kv_rollup", "v1"): "epoch-1",
+    }
+    assert set(tracker.getJobIdsForGroup()) == ungrouped
+    assert tracker.getJobIdsForGroup("epoch-1")
+
+
+def test_the_epochs_caches_are_filled_before_any_write_starts(spark, tmp_path, monkeypatch):
+    """The window and the sidecar table's ops⋈state match are both
+    cached and filled when the side-by-side writes start, so the delta
+    and the deletion-vector write read the match's cache and neither
+    runs the state scan that fills it."""
+    jsc = spark.sparkContext._jsc
+    pipe = _pipe(spark, tmp_path / "wh")
+    pipe.process_batch(_window(spark, 1, EPOCH0), 0)
+    before = set(jsc.getPersistentRDDs().keySet())
+    real = TableStateStore._write_buckets
+    seen = {}
+
+    def write(self, df, vdir, *args, **kwargs):
+        made = set(jsc.getPersistentRDDs().keySet()) - before
+        filled = {
+            info.id() for info in jsc.sc().getRDDStorageInfo()
+            if info.numCachedPartitions() == info.numPartitions()
+        }
+        seen[os.path.relpath(vdir, self.warehouse_dir)] = (len(made), made <= filled)
+        return real(self, df, vdir, *args, **kwargs)
+
+    monkeypatch.setattr(TableStateStore, "_write_buckets", write)
+    pipe.process_batch(_window(spark, 2, EPOCH1), 1)
+    assert seen == {
+        os.path.join(table, name): (2, True)  # the window and the match
+        for table, name in [("kv", "v1"), ("kv", "dv1"), ("kv_rollup", "v1")]
+    }
 
 
 # ---------------------------------------------------- concurrent writers

@@ -32,6 +32,18 @@ if grep -rnE --include='*.py' --exclude=pipeline.py 'os\.(replace|rename)|tempfi
 fi
 echo "no file swaps outside pipeline.py"
 
+echo "== threads start only in pipeline.py (Spark workers) and metrics.py (HTTP server) =="
+# An epoch's workers must take the caller's job group
+# (inheritable_thread_target) and be joined before the epoch releases
+# its caches; pipeline.py starts them.  metrics.py's server runs no job.
+if grep -rnE --include='*.py' 'threading\.Thread\(|ThreadPoolExecutor\(|InheritableThread\(' \
+    substreams_sink_clickhouse_spark/ \
+    | grep -vE '^substreams_sink_clickhouse_spark/streaming/(pipeline|metrics)\.py:'; then
+  echo "FAIL: a thread started outside streaming/pipeline.py (run Spark actions side by side there)"
+  exit 1
+fi
+echo "no threads outside pipeline.py and metrics.py"
+
 echo "== tests and tools import their own checkout =="
 # A fixed absolute path first on sys.path makes a copy of the repository
 # test or run another checkout's package instead of its own.
